@@ -23,7 +23,12 @@ B = 0.75
 
 
 def idf(n_docs: float, df) -> np.ndarray | float:
-    """Lucene BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)). Never negative."""
+    """Lucene BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)).
+
+    Non-negative while df <= N. Between an incremental delta and the next
+    compaction, df still counts superseded versions while N does not, so
+    a term in nearly every doc can get df > N and a negative idf; the
+    pruning scorers in ``wand`` fall back to exact scoring then."""
     df = np.asarray(df, dtype=np.float64)
     return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 

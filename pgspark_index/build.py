@@ -1674,10 +1674,11 @@ def build_unit(
         )
         # bounded parquet row groups keep the query-time term IN (...) read
         # selective INSIDE a file (guide §6): files are term-sorted, so
-        # each ~4 MB row group spans a narrow term range and min/max stats
-        # prune the rest — essential once bytes-adaptive widths produce
-        # multi-GB segment files at real scale (the default 128 MB groups
-        # would make every term lookup decompress 128 MB)
+        # each ~1 MB row group (_SEG_ROWGROUP_BYTES) spans a narrow term
+        # range and min/max stats prune the rest — essential once
+        # bytes-adaptive widths produce multi-GB segment files at real
+        # scale (the default 128 MB groups would make every term lookup
+        # decompress 128 MB)
         segments.write.mode("overwrite").option(
             "parquet.block.size", str(_SEG_ROWGROUP_BYTES)
         ).parquet(

@@ -19,6 +19,9 @@ this size — a handful of floats per query term).
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
@@ -234,23 +237,32 @@ BATCH_RESULT_SCHEMA = "query_id int, doc_id bigint, score double"
 # Python workers + TakeOrdered: ~0.5 s of fixed cost at any data size)
 # dwarfs the work itself. Small queries therefore run entirely on the
 # driver: the SAME pyarrow term-IN segment read the executors would do
-# (row-group pruning via the term-sorted file layout), the SAME wand
-# scorers per unit, the SAME (score DESC, doc_id ASC) merge — bit-identical
-# results (the strategies are order-insensitive: per-doc sums accumulate in
-# sorted term order, see wand._exact_topk). This is the coordinating-node
-# shape of a search engine: a query touching a few hundred KB of postings
-# is one node's work; the cluster is for the queries (and corpora) that
-# aren't.
+# (row-group pruning via the term-sorted file layout), the SAME per-unit
+# kernel, the SAME (score DESC, doc_id ASC) merge — bit-identical results
+# (the kernels are order-insensitive: per-doc sums accumulate in sorted
+# term order, see wand._exact_topk). This is the coordinating-node shape
+# of a search engine: a query touching a few hundred KB of postings is one
+# node's work; the cluster is for the queries (and corpora) that aren't.
+#
+# The tier serves every family that goes through ``_execute`` with a k:
+# ``search`` (no filter_df, tombstones within TOMBSTONE_CLOSURE_LIMIT),
+# ``search_after``, ``search_phrase``, ``search_phrase_prefix``,
+# ``search_proximity`` and ``search_min_should_match``; ``search_batch``
+# has its own driver branch under the same gate.
 #
 # The gate is a hard byte bound, not a heuristic: sum(df) over the query's
 # terms (already in hand from the lexicon lookup) x 16 B/posting decode
-# working set must fit PGSPARK_QUERY_DRIVER_BYTES (default 64 MB; 0
-# disables the tier entirely). Unit count is capped so a many-unit index
-# never serializes per-unit scoring on the driver. Everything over the
-# gate takes the distributed path unchanged.
+# working set, plus, for positional kernels, sum(cf) x 16 B (the repeated
+# doc array and the positions ``wand.score_phrase`` decodes), must fit
+# PGSPARK_QUERY_DRIVER_BYTES (default 64 MB; 0 disables the tier
+# entirely). Unit count is capped so a many-unit index never serializes
+# per-unit scoring on the driver. Everything over the gate takes the
+# distributed path unchanged.
 _DRIVER_TIER_DEFAULT_BYTES = 64 << 20
 _DRIVER_TIER_MAX_UNITS = 64
-_POSTING_DECODE_BYTES = 16  # int64 doc + int64 tf per decoded posting
+# int64 doc + int64 tf per decoded posting; int64 repeated doc + int64
+# position per decoded position
+_POSTING_DECODE_BYTES = 16
 
 
 def _driver_tier_cap() -> int:
@@ -266,13 +278,17 @@ def _driver_tier_cap() -> int:
         return _DRIVER_TIER_DEFAULT_BYTES
 
 
-def _driver_tier_ok(units: list, dfs: dict, terms: list[str]) -> bool:
+def _driver_tier_ok(
+    units: list, dfs: dict, terms: list[str], cfs: dict | None = None
+) -> bool:
+    """``cfs`` (term -> global cf) is given for positional kernels."""
     cap = _driver_tier_cap()
     if cap <= 0 or len(units) > _DRIVER_TIER_MAX_UNITS:
         return False
-    return (
-        sum(int(dfs.get(t, 0)) for t in terms) * _POSTING_DECODE_BYTES <= cap
-    )
+    n = sum(int(dfs.get(t, 0)) for t in terms)
+    if cfs is not None:
+        n += sum(int(cfs.get(t, 0)) for t in terms)
+    return n * _POSTING_DECODE_BYTES <= cap
 
 
 _SEG_DS_CACHE: dict = {}
@@ -289,13 +305,15 @@ _SEG_COLS = [
     "term", "df", "postings",
     "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
 ]
+_SEG_POS_COLS = _SEG_COLS[:3] + ["positions"] + _SEG_COLS[3:]
 
 
 def _unit_seg_pdf(
-    index_dir: str, unit: int, terms: list[str], part_ids=None
+    index_dir: str, unit: int, terms: list[str], part_ids=None,
+    columns: list[str] = _SEG_COLS,
 ):
-    """Driver-side read of one unit's segment rows for ``terms`` -> pandas
-    (same columns the distributed scan selects).
+    """Driver-side read of one unit's segment ``columns`` for ``terms`` ->
+    pandas (the same columns the distributed scan selects).
 
     ``part_ids``: the lexicon entries' (term -> part_id) pointers for the
     query terms — the term-dictionary -> posting-file indirection. Segment
@@ -334,9 +352,7 @@ def _unit_seg_pdf(
         if len(_SEG_DS_CACHE) >= 64:
             _SEG_DS_CACHE.pop(next(iter(_SEG_DS_CACHE)))
         _SEG_DS_CACHE[key] = dset
-    tab = dset.to_table(
-        columns=_SEG_COLS, filter=ds.field("term").isin(terms)
-    )
+    tab = dset.to_table(columns=columns, filter=ds.field("term").isin(terms))
     return tab.to_pandas()
 
 
@@ -504,20 +520,21 @@ def _docs_scan(spark: SparkSession, index_dir: str, units: list[int]) -> DataFra
 
 def _term_stats(
     spark: SparkSession, index_dir: str, terms: list[str], n_docs: int
-) -> tuple[dict[str, float], dict[str, int]]:
-    """Lexicon lookup: (term -> idf, term -> global df). Missing terms are
-    simply absent (score 0 everywhere), like any search engine.
+) -> tuple[dict, dict, dict, dict]:
+    """Lexicon lookup. Missing terms are simply absent (score 0
+    everywhere), like any search engine.
 
     Read directly with pyarrow on the driver — the lexicon is range-
     partitioned and sorted by term, so parquet row-group statistics prune
     to a handful of row groups; no Spark job is scheduled for the (tiny)
-    lookup, which roughly halves single-query latency. The df side feeds
-    the driver-tier byte gate, and the entries side its per-file read
+    lookup, which roughly halves single-query latency. The df and cf sides
+    feed the driver-tier byte gate, and the entries side its per-file read
     targeting, at zero extra I/O.
 
-    Returns (term -> idf, term -> global df, term -> [(unit, part_id)])."""
+    Returns (term -> idf, term -> global df, term -> [(unit, part_id)],
+    term -> global cf)."""
     if not terms:
-        return {}, {}, {}
+        return {}, {}, {}, {}
     import glob as _glob
     import os as _os
 
@@ -544,24 +561,25 @@ def _term_stats(
         cap = _driver_tier_cap() // 8
         if 0 < sum(_os.path.getsize(f) for f in files) <= cap:
             full = ds.dataset(files, format="parquet").to_table(
-                columns=["term", "df_total", "entries"]
+                columns=merge.LEXICON_COLS
             )
             row_of = {
                 t: i for i, t in enumerate(full["term"].to_pylist())
             }
             df_np = full["df_total"].to_numpy(zero_copy_only=False)
+            cf_np = full["cf_total"].to_numpy(zero_copy_only=False)
             ents_col = full["entries"]
             if len(_LEX_MEM_CACHE) >= 2:
                 _LEX_MEM_CACHE.pop(next(iter(_LEX_MEM_CACHE)))
-            mem = (row_of, df_np, ents_col)
+            mem = (row_of, df_np, cf_np, ents_col)
             _LEX_MEM_CACHE[key] = mem
         else:
             if len(_LEX_MEM_TOO_BIG) >= 64:
                 _LEX_MEM_TOO_BIG.pop()
             _LEX_MEM_TOO_BIG.add(key)
     if mem is not None:
-        row_of, df_np, ents_col = mem
-        idfs, dfs, parts = {}, {}, {}
+        row_of, df_np, cf_np, ents_col = mem
+        idfs, dfs, parts, cfs = {}, {}, {}, {}
         for t in terms:
             i = row_of.get(t)
             if i is None:
@@ -569,11 +587,12 @@ def _term_stats(
             df_total = int(df_np[i])
             idfs[t] = float(bm25.idf(n_docs, df_total))
             dfs[t] = df_total
+            cfs[t] = int(cf_np[i])
             parts[t] = [
                 (int(e["unit"]), int(e["part_id"]))
                 for e in ents_col[i].as_py()
             ]
-        return idfs, dfs, parts
+        return idfs, dfs, parts, cfs
 
     dataset = _LEX_DS_CACHE.get(key)
     if dataset is None:
@@ -582,19 +601,17 @@ def _term_stats(
             _LEX_DS_CACHE.pop(next(iter(_LEX_DS_CACHE)))
         _LEX_DS_CACHE[key] = dataset
     table = dataset.to_table(
-        columns=["term", "df_total", "entries"],
-        filter=ds.field("term").isin(terms),
+        columns=merge.LEXICON_COLS, filter=ds.field("term").isin(terms)
     )
-    idfs, dfs, parts = {}, {}, {}
-    for term, df_total, ents in zip(
-        table["term"].to_pylist(),
-        table["df_total"].to_pylist(),
-        table["entries"].to_pylist(),
+    idfs, dfs, parts, cfs = {}, {}, {}, {}
+    for term, df_total, cf_total, ents in zip(
+        *(table[c].to_pylist() for c in merge.LEXICON_COLS)
     ):
         idfs[term] = float(bm25.idf(n_docs, df_total))
         dfs[term] = int(df_total)
+        cfs[term] = int(cf_total)
         parts[term] = [(int(e["unit"]), int(e["part_id"])) for e in ents]
-    return idfs, dfs, parts
+    return idfs, dfs, parts, cfs
 
 
 def _term_idfs(spark: SparkSession, index_dir: str, terms: list[str], n_docs: int) -> dict[str, float]:
@@ -655,6 +672,133 @@ def _rows_to_lists(pdf, idfs: dict[str, float]) -> list[dict]:
     ]
 
 
+# ---- the per-unit executor -------------------------------------------------
+# Every scoring family is a spec: the terms it scores, the terms the
+# lexicon must hold, whether the kernel reads positions, and one per-unit
+# kernel with the wand scorer signature
+#     kernel(lists, avgdl, k, sc, exclude=None) -> (doc_ids, scores)
+# (k=None: every match). ``_plan`` runs the lexicon lookup and the
+# tombstone excluder once; ``_run`` then executes the same kernel either on
+# the driver tier or as one groupBy("unit").applyInPandas job, and builds
+# the result DataFrame. A doc's postings all live in its own unit, so unit
+# top-k emissions merge into the exact global top-k.
+
+
+class _Spec(NamedTuple):
+    terms: list[str]                 # scored terms (sorted, distinct)
+    kernel: Callable
+    k: int | None
+    required: tuple = ()             # absent from the lexicon -> no match
+    min_terms: int = 1               # fewer present terms -> no match
+    neg_terms: tuple = ()            # must_not: docs holding any are excluded
+    positions: bool = False
+
+
+class _Plan(NamedTuple):
+    stats: dict
+    idfs: dict                       # present scored term -> idf
+    neg: list                        # present must_not terms
+    dfs: dict
+    cfs: dict
+    parts: dict
+    # None when the tombstone set exceeds the limit: too big for closures
+    excluder: Callable | None
+
+
+def _plan(
+    spark: SparkSession, index_dir: str, spec: _Spec,
+    tombstone_limit: int = TOMBSTONE_CLOSURE_LIMIT,
+) -> _Plan | None:
+    """Lexicon lookup + tombstone excluder for ``spec`` -> None when no doc
+    can match (a required term or too many terms are absent)."""
+    stats = merge.load_stats(index_dir)
+    idfs, dfs, parts, cfs = _term_stats(
+        spark, index_dir, sorted(set(spec.terms) | set(spec.neg_terms)),
+        stats["n_docs"],
+    )
+    neg = [t for t in spec.neg_terms if t in idfs]
+    idfs = {t: idfs[t] for t in spec.terms if t in idfs}
+    if len(idfs) < spec.min_terms or any(t not in idfs for t in spec.required):
+        return None
+    excluder, _ = _tombstone_excluder_bounded(index_dir, tombstone_limit)
+    return _Plan(stats, idfs, neg, dfs, cfs, parts, excluder)
+
+
+def _seg_rows(spark: SparkSession, index_dir: str, plan: _Plan, cols: list[str]):
+    """Distributed scan of every committed unit's rows for the plan's
+    terms (scored + must_not)."""
+    return (
+        _seg_scan(spark, index_dir, plan.stats["units"])
+        .filter(F.col("term").isin(sorted(plan.idfs) + plan.neg))
+        .select("unit", *cols)
+    )
+
+
+def _run(spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan) -> DataFrame:
+    """Score ``plan`` with ``spec.kernel`` on the driver tier when the byte
+    gate admits it, else in one Spark job -> DataFrame(doc_id, score),
+    (score DESC, doc_id ASC) top-k; unordered every-match when k is None."""
+    units = plan.stats["units"]
+    avgdl = float(plan.stats["avgdl"])
+    idfs, neg, k = plan.idfs, plan.neg, spec.k
+    read = sorted(idfs) + neg
+    cols = _SEG_POS_COLS if spec.positions else _SEG_COLS
+
+    def score(unit, pdf, excluder):
+        sc = _sidecar(index_dir, unit)
+        # neg docs decode as ordinals; tombstone doc_ids translate to them
+        pdf, neg_ords = _split_must_not(pdf, neg)
+        return spec.kernel(
+            _rows_to_lists(pdf, idfs), avgdl, k, sc,
+            exclude=_merge_excludes(sc.ords_of_docs(excluder(unit)), neg_ords),
+        )
+
+    if (
+        k is not None
+        and plan.excluder is not None
+        and _driver_tier_ok(
+            units, plan.dfs, read, plan.cfs if spec.positions else None
+        )
+    ):
+        up = _unit_part_ids(plan.parts, read, units)
+
+        def unit_rows(u: int) -> list:
+            if not up[u]:
+                return []
+            pdf = _unit_seg_pdf(index_dir, u, read, part_ids=up[u], columns=cols)
+            if len(pdf) == 0:
+                return []
+            docs, scores = score(u, pdf, plan.excluder)
+            return list(zip(docs.tolist(), scores.tolist()))
+
+        rows = [r for rs in _map_units(units, unit_rows) for r in rs]
+        return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
+
+    excluder = plan.excluder or _tombstone_excluder(index_dir)
+
+    def score_unit(key, pdf):
+        import pandas as pd
+
+        docs, scores = score(key[0], pdf, excluder)
+        return pd.DataFrame({"doc_id": docs, "score": scores})
+
+    per_unit = _seg_rows(spark, index_dir, plan, cols).groupBy("unit").applyInPandas(
+        score_unit, schema=RESULT_SCHEMA
+    )
+    if k is None:
+        # every match, un-ordered and un-limited (a live doc exists in
+        # exactly one unit, so the union needs no dedup)
+        return per_unit
+    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _execute(spark: SparkSession, index_dir: str, spec: _Spec) -> DataFrame:
+    plan = _plan(spark, index_dir, spec)
+    if plan is None:
+        return _local_df(spark, [], RESULT_SCHEMA)
+    return _run(spark, index_dir, spec, plan)
+
+
 def search(
     spark: SparkSession,
     index_dir: str,
@@ -701,93 +845,39 @@ def search(
     tombstone-corrected at merge time; per-term df still counts superseded
     versions (Lucene deleted-docs-affect-docFreq semantics); tombstoned
     docs are excluded from results either way."""
-    stats = merge.load_stats(index_dir)
     terms = sorted(set(terms))
-    neg_terms = sorted(set(exclude_terms or []))
-    all_idfs, all_dfs, all_parts = _term_stats(
-        spark, index_dir, sorted(set(terms + neg_terms)), stats["n_docs"]
+    scorer = wand.STRATEGIES[strategy]
+    if mode == "and":
+        scorer = functools.partial(wand.score_conjunctive, n_required=len(terms))
+    spec = _Spec(
+        terms, scorer, k,
+        required=tuple(terms) if mode == "and" else (),
+        neg_terms=tuple(sorted(set(exclude_terms or []))),
     )
-    idfs = {t: v for t, v in all_idfs.items() if t in terms}
-    neg_present = [t for t in neg_terms if t in all_idfs]
-    present = sorted(idfs)
-    if not present or (mode == "and" and len(present) < len(terms)):
+    plan = _plan(spark, index_dir, spec, tombstone_closure_limit)
+    if plan is None:
         return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    scorer = wand.score_conjunctive if mode == "and" else wand.STRATEGIES[strategy]
-    excluder, tomb_big = _tombstone_excluder_bounded(
-        index_dir, tombstone_closure_limit
-    )
-    n_docs = int(stats["n_docs"])
+    if plan.excluder is not None and filter_df is None:
+        return _run(spark, index_dir, spec, plan)
 
-    if (
-        filter_df is None
-        and not tomb_big
-        and _driver_tier_ok(stats["units"], all_dfs, present + neg_present)
-    ):
-        # small query: score on the driver (same reads, same scorers, same
-        # merge order — bit-identical; see the tier comment above)
-        up = _unit_part_ids(all_parts, present + neg_present, stats["units"])
-
-        def unit_rows(u: int) -> list:
-            if not up[u]:
-                return []
-            pdf = _unit_seg_pdf(
-                index_dir, u, present + neg_present, part_ids=up[u]
-            )
-            if len(pdf) == 0:
-                return []
-            sc = _sidecar(index_dir, u)
-            pdf2, neg_ords = _split_must_not(pdf, neg_present)
-            docs, scores = scorer(
-                _rows_to_lists(pdf2, idfs), avgdl, k, sc,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(u)), neg_ords),
-            )
-            return list(zip(docs.tolist(), scores.tolist()))
-
-        rows = [r for rs in _map_units(stats["units"], unit_rows) for r in rs]
-        return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present + neg_present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    if tomb_big:
+    seg = _seg_rows(spark, index_dir, plan, _SEG_COLS)
+    avgdl = float(plan.stats["avgdl"])
+    n_docs = int(plan.stats["n_docs"])
+    if plan.excluder is None:
         # tombstone set beyond the closure limit: unit-scoped exclusion
         # runs as a DISTRIBUTED anti-join over per-unit top-c emissions
         # (escalating until the kth kept score is provably final) — the
         # doc-id array never touches the driver or the task closures
         return _search_escalating(
-            spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
+            spark, index_dir, seg, plan.idfs, avgdl, scorer, k, n_docs,
             excluder=None,
             semi_df=filter_df.select("doc_id") if filter_df is not None else None,
-            tomb_anti=True, neg_terms=neg_present,
+            tomb_anti=True, neg_terms=plan.neg,
         )
-
-    if filter_df is not None:
-        return _search_filtered(
-            spark, index_dir, seg, idfs, avgdl, scorer, k, excluder,
-            filter_df, filter_broadcast_limit, n_docs, neg_terms=neg_present,
-        )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        # neg docs decode as ordinals; tombstone doc_ids translate to them
-        pdf, neg_ords = _split_must_not(pdf, neg_present)
-        docs, scores = scorer(
-            _rows_to_lists(pdf, idfs), avgdl, k, sc,
-            exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _search_filtered(
+        spark, index_dir, seg, plan.idfs, avgdl, scorer, k, plan.excluder,
+        filter_df, filter_broadcast_limit, n_docs, neg_terms=plan.neg,
+    )
 
 
 def search_after(
@@ -811,67 +901,12 @@ def search_after(
     Unlike from+size pagination, memory is O(k) per unit regardless of
     depth. Cursor equality is reliable because page N's scores were
     computed by this same accumulation order (bit-identical floats)."""
-    stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    neg_terms = sorted(set(exclude_terms or []))
-    all_idfs, all_dfs, all_parts = _term_stats(
-        spark, index_dir, sorted(set(terms + neg_terms)), stats["n_docs"]
-    )
-    idfs = {t: v for t, v in all_idfs.items() if t in terms}
-    neg_present = [t for t in neg_terms if t in all_idfs]
-    present = sorted(idfs)
-    if not present:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
     cursor = (float(after[0]), int(after[1]))
-
-    if _driver_tier_ok(stats["units"], all_dfs, present + neg_present):
-        # small query: driver tier (same scorer, same cursor mask — the
-        # tier comment near the top of this module)
-        up = _unit_part_ids(all_parts, present + neg_present, stats["units"])
-
-        def unit_rows(u: int) -> list:
-            if not up[u]:
-                return []
-            pdf = _unit_seg_pdf(
-                index_dir, u, present + neg_present, part_ids=up[u]
-            )
-            if len(pdf) == 0:
-                return []
-            sc = _sidecar(index_dir, u)
-            pdf2, neg_ords = _split_must_not(pdf, neg_present)
-            docs, scores = wand.score_exhaustive_after(
-                _rows_to_lists(pdf2, idfs), avgdl, k, sc, cursor,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(u)), neg_ords),
-            )
-            return list(zip(docs.tolist(), scores.tolist()))
-
-        rows = [r for rs in _map_units(stats["units"], unit_rows) for r in rs]
-        return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present + neg_present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        pdf, neg_ords = _split_must_not(pdf, neg_present)
-        docs, scores = wand.score_exhaustive_after(
-            _rows_to_lists(pdf, idfs), avgdl, k, sc, cursor,
-            exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _execute(spark, index_dir, _Spec(
+        sorted(set(terms)),
+        functools.partial(wand.score_exhaustive_after, after=cursor), k,
+        neg_terms=tuple(sorted(set(exclude_terms or []))),
+    ))
 
 
 UNIT_RESULT_SCHEMA = "unit int, doc_id bigint, score double"
@@ -1924,6 +1959,33 @@ def search_multifield_fuzzy(
     return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
+def _slot_lists(lists: list[dict], slots: list) -> list[list[dict]]:
+    """A unit's lists -> one list per positional slot; ``slots[i]`` is the
+    terms any of which fills slot i. Repeated phrase words share the same
+    row objects (the positional kernels dedup scoring by identity)."""
+    by_term: dict[str, list[dict]] = {}
+    for lst in lists:
+        by_term.setdefault(lst["term"], []).append(lst)
+    return [[l for t in slot for l in by_term.get(t, [])] for slot in slots]
+
+
+def _positional(
+    spark: SparkSession, index_dir: str, slots: list, k: int | None,
+    required: list[str], kernel: Callable,
+) -> DataFrame:
+    """Run a positional kernel ``kernel(slot_lists, avgdl, k, sc,
+    exclude=...)`` over the terms of ``slots``, each of ``required``
+    present."""
+
+    def unit_kernel(lists, avgdl, k, sc, exclude=None):
+        return kernel(_slot_lists(lists, slots), avgdl, k, sc, exclude=exclude)
+
+    terms = sorted({t for slot in slots for t in slot})
+    return _execute(spark, index_dir, _Spec(
+        terms, unit_kernel, k, required=tuple(required), positions=True,
+    ))
+
+
 def search_phrase(
     spark: SparkSession,
     index_dir: str,
@@ -1936,47 +1998,11 @@ def search_phrase(
     positions p, p+1, ..., the Lucene match_phrase semantics the reference
     gets from its OpenSearch text fields, opensearch_mapper.go:17-68);
     matching docs are ranked by BM25 over the phrase's distinct terms.
-    -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(phrase))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if len(idfs) < len(uniq_terms) or not phrase:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    phrase_order = list(phrase)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    -> DataFrame(doc_id, score), (score DESC, doc_id ASC); every match,
+    unordered, when ``k`` is None (the rescore building block)."""
+    return _positional(
+        spark, index_dir, [[t] for t in phrase], k, phrase, wand.score_phrase
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        slot_lists = [by_term.get(t, []) for t in phrase_order]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_phrase(
-            slot_lists, avgdl, k, sc,
-            exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    if k is None:
-        # every phrase match, un-ordered and un-limited (a live doc exists
-        # in exactly one unit, so the union needs no dedup) — the rescore
-        # building block
-        return per_unit
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_phrase_prefix(
@@ -2003,49 +2029,13 @@ def search_phrase_prefix(
     if not phrase:
         return _local_df(spark, [], RESULT_SCHEMA)
     exact = list(phrase[:-1])
-    expansions = expand_prefix(index_dir, phrase[-1], max_expansions)
+    expansions = sorted(set(expand_prefix(index_dir, phrase[-1], max_expansions)))
     if not expansions:
         return _local_df(spark, [], RESULT_SCHEMA)
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(exact) | set(expansions))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if any(t not in idfs for t in exact):
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    expansion_set = sorted(set(expansions))
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    return _positional(
+        spark, index_dir, [[t] for t in exact] + [expansions], k, exact,
+        wand.score_phrase,
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        last_slot: list[dict] = []
-        for t in expansion_set:
-            last_slot.extend(by_term.get(t, []))
-        slot_lists = [by_term.get(t, []) for t in exact] + [last_slot]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_phrase(
-            slot_lists, avgdl, k, sc,
-            exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    if k is None:
-        return per_unit
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_min_should_match(
@@ -2059,37 +2049,14 @@ def search_min_should_match(
     least ``min_should_match`` distinct query terms (OpenSearch bool/should
     + minimum_should_match; m=1 is pure OR, m=len(terms) is AND).
     -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
-    stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    idfs = _term_idfs(spark, index_dir, terms, stats["n_docs"])
-    present = sorted(idfs)
     m = max(1, int(min_should_match))
-    if len(present) < m:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
 
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    def kernel(lists, avgdl, k, sc, exclude=None):
+        return wand.score_min_should(lists, avgdl, k, m, sc, exclude=exclude)
+
+    return _execute(
+        spark, index_dir, _Spec(sorted(set(terms)), kernel, k, min_terms=m)
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_min_should(
-            _rows_to_lists(pdf, idfs), avgdl, k, m,
-            sc, exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_proximity(
@@ -2103,41 +2070,10 @@ def search_proximity(
     each phrase word must follow the previous within ``slop`` intervening
     tokens (slop=0 = exact phrase — the ordered variant of Lucene's sloppy
     match_phrase). -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(phrase))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if len(idfs) < len(uniq_terms) or not phrase:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    phrase_order = list(phrase)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    return _positional(
+        spark, index_dir, [[t] for t in phrase], k, phrase,
+        functools.partial(wand.score_proximity, slop=slop),
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        slot_lists = [by_term.get(t, []) for t in phrase_order]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_proximity(
-            slot_lists, avgdl, k, sc,
-            slop=slop, exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 MATCH_SCHEMA = "doc_id bigint, n_matched int"
@@ -2608,7 +2544,9 @@ def search_batch(
     local lists; the global per-query top-k is a single window."""
     stats = merge.load_stats(index_dir)
     all_terms = sorted({t for q in queries for t in q["terms"]})
-    idfs, all_dfs, all_parts = _term_stats(spark, index_dir, all_terms, stats["n_docs"])
+    idfs, all_dfs, all_parts, _ = _term_stats(
+        spark, index_dir, all_terms, stats["n_docs"]
+    )
     qspec = [
         {
             "query_id": int(q["query_id"]),

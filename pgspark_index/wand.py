@@ -278,6 +278,30 @@ _DENSE_TAAT_MAX_ROWS = int(
 )
 
 
+def _dense_ok(sc) -> bool:
+    """The unit's sidecar supports the flat accumulator at this size."""
+    ords = getattr(sc, "ords", None)
+    return (
+        ords is not None
+        and hasattr(sc, "_row_of")
+        and 0 < ords.size <= _DENSE_TAAT_MAX_ROWS
+    )
+
+
+def _nonpositive_idf(lists) -> bool:
+    """Some list has an idf <= 0: its upper bound is not an upper bound,
+    so no threshold-pruning scorer is safe on this query."""
+    return any(l["idf"] <= 0 for l in lists)
+
+
+def _score_exact(lists, avgdl: float, k: int, sc, exclude, include):
+    """Unpruned top-k: dense TAAT where the sidecar allows, else the
+    exhaustive TAAT (identical results either way)."""
+    if _dense_ok(sc):
+        return _score_dense_taat(lists, avgdl, k, sc, exclude, include)
+    return score_exhaustive(lists, avgdl, k, sc, exclude, include)
+
+
 def _score_dense_taat(lists, avgdl: float, k: int, sc, exclude, include):
     """Flat-accumulator exhaustive TAAT over the unit's row space.
 
@@ -321,17 +345,15 @@ def score_maxscore(
     is <= the kth-best final score; an unseen doc's best possible final
     score is the remaining upper-bound sum, so when that is < T the doc
     can never enter the top-k. Final scores for surviving candidates are
-    re-summed in term order for bit-exactness."""
+    re-summed in term order for bit-exactness. The argument needs every
+    contribution to be non-negative: a query with an idf <= 0 (df > N
+    between a delta and compaction, see ``bm25.idf``) is scored exactly."""
     if not lists:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
-    ords = getattr(sc, "ords", None)
-    if (
-        ords is not None
-        and hasattr(sc, "_row_of")
-        and 0 < ords.size <= _DENSE_TAAT_MAX_ROWS
-        and sum(int(l["df"]) for l in lists) >= ords.size
+    if _nonpositive_idf(lists) or (
+        _dense_ok(sc) and sum(int(l["df"]) for l in lists) >= sc.ords.size
     ):
-        return _score_dense_taat(lists, avgdl, k, sc, exclude, include)
+        return _score_exact(lists, avgdl, k, sc, exclude, include)
     ranks = _term_ranks(lists)
     # Salted lists of ONE term are doc-disjoint slices of that term's
     # postings — process them as one logical list: the per-doc upper
@@ -456,6 +478,10 @@ def score_bmw(
         return score_maxscore(lists, avgdl, k, sc, exclude, include)
     if not lists:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
+    if _nonpositive_idf(lists):
+        # the pivot and block-max skips rest on the same non-negative
+        # contributions as MaxScore's threshold
+        return _score_exact(lists, avgdl, k, sc, exclude, include)
     ranks = _term_ranks(lists)
 
     class _BCursor:
@@ -582,6 +608,7 @@ def score_bmw(
 def score_conjunctive(
     lists: list[dict], avgdl: float, k: int, sc,
     exclude: np.ndarray | None = None, include: np.ndarray | None = None,
+    n_required: int = 0,
 ):
     """AND semantics: only docs containing EVERY distinct query term score.
 
@@ -589,8 +616,12 @@ def score_conjunctive(
     one term are doc-disjoint, so their concatenation sorts to the term's
     doc set); surviving docs are then scored exactly like the OR path —
     per-term contributions summed in sorted term order (bit-exact vs the
-    SQL oracle's HAVING count(distinct term) = n form)."""
-    if not lists:
+    SQL oracle's HAVING count(distinct term) = n form).
+
+    ``n_required``: the query's distinct-term count. A unit's lists cover
+    only the terms that unit holds, and a doc's postings all live in its
+    own unit, so a unit holding fewer distinct terms matches nothing."""
+    if not lists or len({l["term"] for l in lists}) < n_required:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
     ranks = _term_ranks(lists)
     decoded = []

@@ -2,14 +2,15 @@
 the distributed path, and a gate that actually gates.
 
 The tier runs a bounded-size query entirely on the driver (same pyarrow
-term-IN segment read, same wand scorers, same merge order); everything
+term-IN segment read, same per-unit kernels, same merge order); everything
 over PGSPARK_QUERY_DRIVER_BYTES takes the distributed path unchanged.
 """
 
+import numpy as np
 import pandas as pd
 import pytest
 
-from pgspark_index import build, merge, query
+from pgspark_index import build, incremental, merge, query
 
 DOCS = [
     "alpha beta gamma delta alpha",
@@ -122,3 +123,167 @@ def test_local_df_roundtrips_doubles_exactly(spark):
     rows = [(i, v) for i, v in enumerate(vals)]
     got = _collect(query._local_df(spark, rows, query.RESULT_SCHEMA))
     assert got == rows  # bit-exact float64 round-trip through the SQL literal
+
+
+# ---- two units with tombstones pending ---------------------------------------
+# Base: one unit of 40 docs. Delta: 20 recrawls (docs 0-19) plus 5 new docs
+# in a second unit, not compacted. "common" is in base docs 0-23 and in
+# every delta doc, so its df (49, superseded versions included) exceeds
+# N (45) and its idf is negative. "gold" + "silver" co-occur only in base
+# docs 33-34; the delta unit holds "gold" alone.
+WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+
+
+def _pending_corpus():
+    rng = np.random.RandomState(7)
+
+    def words(n):
+        return list(rng.choice(WORDS, size=n))
+
+    base = {}
+    for i in range(40):
+        w = words(rng.randint(8, 16))
+        if i < 24:
+            w.insert(rng.randint(len(w)), "common")
+        if i in (30, 31, 32):
+            w.append("rare")
+        if i in (33, 34):
+            w += ["gold", "silver"]
+        if i == 35:
+            w.append("gold")
+        base[i] = " ".join(w)
+    delta = {
+        i: " ".join(["common", "gold"] + words(rng.randint(8, 16)))
+        for i in list(range(20)) + list(range(100, 105))
+    }
+    return base, delta
+
+
+@pytest.fixture(scope="module")
+def pending(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("pending") / "idx")
+    base, delta = _pending_corpus()
+
+    def provider(texts):
+        pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
+        return build.docs_unit_provider(
+            spark.createDataFrame(pdf, "doc_id long, text string")
+        )
+
+    kw = dict(num_units=1, partitions=2, sample_fraction=1.0, with_positions=True)
+    build.build_index(spark, provider(base), d, **kw)
+    merge.merge_index(spark, d)
+    res = incremental.build_delta(
+        spark, provider(delta), d, input_snapshot_id=1, **kw
+    )
+    assert res["tombstones"] == 20
+    live = {**base, **delta}
+    return d, {i: t.split() for i, t in live.items()}
+
+
+def _tier_and_dist(monkeypatch, call):
+    """Rows with the tier forced off, then on; the tier must have run."""
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", "0")
+    df = call()
+    assert not isinstance(df, query._DriverLocalDataFrame)
+    dist = _collect(df)
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", str(64 << 20))
+    df = call()
+    assert isinstance(df, query._DriverLocalDataFrame)
+    return _collect(df), dist
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda s, d: query.search_phrase(s, d, ["alpha", "beta"], 8),
+        lambda s, d: query.search_phrase(s, d, ["beta", "alpha", "beta"], 8),
+        lambda s, d: query.search_phrase(s, d, ["common", "gold"], 8),
+        lambda s, d: query.search_phrase_prefix(s, d, ["gamma", "de"], 8),
+        lambda s, d: query.search_proximity(s, d, ["alpha", "zeta"], 2, 8),
+        lambda s, d: query.search_min_should_match(
+            s, d, ["alpha", "gold", "rare", "silver"], 2, 8
+        ),
+    ],
+    ids=["phrase", "phrase-repeat", "phrase-neg-idf", "phrase-prefix",
+         "proximity", "msm"],
+)
+def test_families_tier_matches_distributed(spark, pending, monkeypatch, call):
+    tier, dist = _tier_and_dist(monkeypatch, lambda: call(spark, pending[0]))
+    assert tier and tier == dist  # bit-exact rows, tombstoned versions out
+
+
+def test_and_needs_every_term_in_the_unit(spark, pending, monkeypatch):
+    """AND with fewer than k full matches on a two-unit index: the delta
+    unit holds "gold" but no "silver", so it must contribute nothing.
+
+    Audit of the other conjunctive per-unit kernels: ``wand.score_phrase``
+    and ``wand.score_proximity`` return nothing when a phrase slot has no
+    list in the unit, and ``wand.score_min_should`` counts distinct terms
+    per doc, so only ``score_conjunctive`` needed the unit-level rule."""
+    idx, live = pending
+    want = sorted(
+        i for i, w in live.items() if "gold" in w and "silver" in w
+    )
+    assert want == [33, 34]
+    tier, dist = _tier_and_dist(
+        monkeypatch,
+        lambda: query.search(spark, idx, ["gold", "silver"], 10, mode="and"),
+    )
+    assert tier == dist
+    assert sorted(d for d, _ in tier) == want
+
+
+def test_negative_idf_maxscore_is_exact(spark, pending):
+    """Pending state with df > N: "common" has a negative idf, which breaks
+    MaxScore's pruning bound; the scorers must fall back to exact."""
+    idx, _ = pending
+    stats = merge.load_stats(idx)
+    idfs, dfs, _, _ = query._term_stats(spark, idx, ["common"], stats["n_docs"])
+    assert dfs["common"] > stats["n_docs"] and idfs["common"] < 0
+    for terms in (["common", "rare"], ["common", "gold", "rare"]):
+        for k in (1, 3, 30):
+            got = {
+                s: _collect(query.search(spark, idx, terms, k, strategy=s))
+                for s in ("maxscore", "bmw", "exhaustive")
+            }
+            assert got["maxscore"] == got["exhaustive"], (terms, k)
+            assert got["bmw"] == got["exhaustive"], (terms, k)
+    qs = [
+        {"query_id": 0, "terms": ["common", "rare"], "k": 1},
+        {"query_id": 1, "terms": ["common", "gold", "rare"], "k": 3},
+    ]
+    batch = {
+        s: sorted(tuple(r) for r in query.search_batch(spark, idx, qs, s).collect())
+        for s in ("maxscore", "exhaustive")
+    }
+    assert batch["maxscore"] == batch["exhaustive"]
+
+
+def test_positional_gate_counts_positions(spark, pending, monkeypatch):
+    idx, _ = pending
+    assert not query._driver_tier_ok([0], {"a": 100}, ["a"], cfs={"a": 10**9})
+    assert query._driver_tier_ok([0], {"a": 100}, ["a"], cfs={"a": 300})
+    stats = merge.load_stats(idx)
+    terms = ["alpha", "beta"]
+    _, dfs, _, cfs = query._term_stats(spark, idx, terms, stats["n_docs"])
+    postings = sum(dfs.values()) * query._POSTING_DECODE_BYTES
+    assert sum(cfs.values()) > sum(dfs.values())
+    # room for the postings but not the positions: phrase goes distributed,
+    # the same terms without positions stay on the driver
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", str(postings))
+    phrase = query.search_phrase(spark, idx, terms, 5)
+    assert not isinstance(phrase, query._DriverLocalDataFrame)
+    msm = query.search_min_should_match(spark, idx, terms, 2, 5)
+    assert isinstance(msm, query._DriverLocalDataFrame)
+
+
+def test_every_match_call_stays_distributed(spark, pending):
+    idx, live = pending
+    df = query.search_phrase(spark, idx, ["alpha", "beta"], k=None)
+    assert not isinstance(df, query._DriverLocalDataFrame)
+    want = {
+        i for i, w in live.items()
+        if any(a == "alpha" and b == "beta" for a, b in zip(w, w[1:]))
+    }
+    assert {r["doc_id"] for r in df.collect()} == want

@@ -209,6 +209,37 @@ def test_phrase_leaf_equals_search_phrase(spark, built):
         [(r["doc_id"], r["score"]) for r in via_dsl]
 
 
+def test_tier_results_compose_with_dsl_and_rescore(spark, built, monkeypatch):
+    """Driver-tier results (``query._DriverLocalDataFrame``) feed boosts,
+    from/size offsets, bool trees and rescoring as ordinary DataFrames:
+    every composition gives identical rows with the tier forced off."""
+    phrase = ["table", "hash"]
+    calls = [
+        lambda: query.execute_dsl(
+            spark, built, {"phrase": {"terms": phrase, "boost": 2.5}}, 5, 3
+        ),
+        lambda: query.execute_dsl(spark, built, {"bool": {
+            "must": [{"phrase": {"terms": phrase}}],
+            "should": [{"match": {"terms": ["data", "fast"]}}],
+        }}, 8),
+        lambda: query.search_rescore(
+            spark, built, ["data", "fast"], phrase, k=8, window=40
+        ),
+    ]
+
+    def rows():
+        return [[(r["doc_id"], r["score"]) for r in c().collect()] for c in calls]
+
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", "0")
+    off = rows()
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", str(64 << 20))
+    assert isinstance(
+        query.search_phrase(spark, built, phrase, 5), query._DriverLocalDataFrame
+    )
+    on = rows()
+    assert all(off) and on == off
+
+
 def test_expansion_leaves_inside_bool(spark, built, model):
     # prefix w00* (expands against the lexicon) as a must clause
     dsl = {"bool": {

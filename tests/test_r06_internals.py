@@ -132,7 +132,7 @@ def test_dense_taat_matches_classic_maxscore(spark, idx, monkeypatch):
 
     stats = merge.load_stats(idx)
     terms = ["alpha", "beta", "gamma", "delta"]  # dense vs the tiny corpus
-    idfs, dfs, parts = query._term_stats(spark, idx, terms, stats["n_docs"])
+    idfs, dfs, parts, _ = query._term_stats(spark, idx, terms, stats["n_docs"])
     up = query._unit_part_ids(parts, sorted(idfs), stats["units"])
     outs = {}
     for cap in (8_000_000, 0):  # dense engaged vs force-classic

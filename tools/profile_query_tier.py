@@ -54,7 +54,7 @@ def main():
             stats = merge.load_stats(index_dir)
             t_stats += time.time() - t0
             t0 = time.time()
-            idfs, dfs, lparts = query._term_stats(
+            idfs, dfs, lparts, _ = query._term_stats(
                 spark, index_dir, terms, stats["n_docs"]
             )
             t_lex += time.time() - t0
