@@ -270,6 +270,28 @@ def _empty_lists(n: int, typ):
     return pa.ListArray.from_arrays(pa.array(offs), pa.array([], type=typ))
 
 
+def _binary_parts(arr):
+    """Binary column -> (byte offsets int64[n+1] rebased to 0, flat uint8
+    data slice): the column's own buffers, no per-row objects."""
+    o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    buf = arr.buffers()[2]
+    data = (
+        np.frombuffer(buf, dtype=np.uint8) if buf is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    return o - o[0], data[o[0] : o[-1]]
+
+
+def _list_parts(arr):
+    """List column -> (value offsets int64[n+1] rebased to 0, flat child
+    values slice as numpy)."""
+    o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    vals = arr.values.slice(int(o[0]), int(o[-1] - o[0]))
+    return o - o[0], vals.to_numpy(zero_copy_only=False)
+
+
 def _binary_from_flat(blob, offsets: np.ndarray):
     """Binary column over ONE shared buffer: row k = blob[off[k]:off[k+1]]."""
     import pyarrow as pa
@@ -949,24 +971,6 @@ def _splice_merge_fn(batches):
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
 
-    def bin_parts(arr):
-        # (byte offsets int64[n+1] rebased to 0, flat uint8 data slice)
-        o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-        o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-        buf = arr.buffers()[2]
-        data = (
-            np.frombuffer(buf, dtype=np.uint8) if buf is not None
-            else np.zeros(0, dtype=np.uint8)
-        )
-        return o - o[0], data[o[0] : o[-1]]
-
-    def list_parts(arr):
-        # (value offsets int64[n+1] rebased to 0, flat child values slice)
-        o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-        o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-        vals = arr.values.slice(int(o[0]), int(o[-1] - o[0]))
-        return o - o[0], vals.to_numpy(zero_copy_only=False)
-
     term_chunks: list = []
     field_chunks: list = []
     salt_c, df_c, cf_c, first_c = [], [], [], []
@@ -987,23 +991,23 @@ def _splice_merge_fn(batches):
         df_c.append(b.column("df").to_numpy(zero_copy_only=False))
         cf_c.append(b.column("cf").to_numpy(zero_copy_only=False))
         first_c.append(b.column("first_doc").to_numpy(zero_copy_only=False))
-        o, d = bin_parts(b.column("postings"))
+        o, d = _binary_parts(b.column("postings"))
         post_off_c.append(o[:-1] + post_base)
         post_dat.append(d)
         post_base += d.shape[0]
-        o, d = bin_parts(b.column("positions"))
+        o, d = _binary_parts(b.column("positions"))
         pos_off_c.append(o[:-1] + pos_base)
         pos_dat.append(d)
         pos_base += d.shape[0]
-        o, v = list_parts(b.column("block_last_doc"))
+        o, v = _list_parts(b.column("block_last_doc"))
         blk_off_c.append(o[:-1] + blk_base)
         blk_base += v.shape[0]
         bld_c.append(v)
-        _, v = list_parts(b.column("block_max_tf"))
+        _, v = _list_parts(b.column("block_max_tf"))
         bmt_c.append(v)
-        _, v = list_parts(b.column("block_min_dl"))
+        _, v = _list_parts(b.column("block_min_dl"))
         bmd_c.append(v)
-        _, v = list_parts(b.column("block_offset"))
+        _, v = _list_parts(b.column("block_offset"))
         boff_c.append(v)
     if not term_chunks:
         return
@@ -1274,24 +1278,7 @@ def make_rebase_fn(bases: dict[int, int]):
             ub, inv = np.unique(units, return_inverse=True)
             base_row = np.array([bases[int(u)] for u in ub], dtype=np.int64)[inv]
 
-            def bin_parts(arr):
-                o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-                o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-                buf = arr.buffers()[2]
-                data = (
-                    np.frombuffer(buf, dtype=np.uint8)
-                    if buf is not None
-                    else np.zeros(0, dtype=np.uint8)
-                )
-                return o - o[0], data[o[0] : o[-1]]
-
-            def list_parts(arr):
-                o = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-                o = o[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-                vals = arr.values.slice(int(o[0]), int(o[-1] - o[0]))
-                return o - o[0], vals.to_numpy(zero_copy_only=False)
-
-            post_o, post_d = bin_parts(b.column("postings"))
+            post_o, post_d = _binary_parts(b.column("postings"))
             # first varint of every list: absolute first ordinal + length
             v0, fl = codecs.read_first_varints(post_d, post_o[:-1])
             new_first = v0 + base_row.view(np.uint64)
@@ -1309,17 +1296,17 @@ def make_rebase_fn(bases: dict[int, int]):
                 out, out_off[:-1] + nf_len, post_d, post_o[:-1] + fl, tail_len
             )
 
-            blk_o, bld = list_parts(b.column("block_last_doc"))
+            blk_o, bld = _list_parts(b.column("block_last_doc"))
             counts = blk_o[1:] - blk_o[:-1]
             bld_new = bld.astype(np.int64) + np.repeat(base_row, counts)
-            _, boff = list_parts(b.column("block_offset"))
+            _, boff = _list_parts(b.column("block_offset"))
             delta = nf_len - fl
             boff_new = boff.astype(np.int64) + np.repeat(delta, counts)
             starts = blk_o[:-1][counts > 0]
             boff_new[starts] = 0  # first block offset is always 0
 
-            _, bmt = list_parts(b.column("block_max_tf"))
-            _, bmd = list_parts(b.column("block_min_dl"))
+            _, bmt = _list_parts(b.column("block_max_tf"))
+            _, bmd = _list_parts(b.column("block_min_dl"))
             pos_arr = b.column("positions")
 
             arrays = [

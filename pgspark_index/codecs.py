@@ -296,6 +296,37 @@ def decode_postings(blob: bytes, df: int) -> tuple[np.ndarray, np.ndarray]:
     return np.cumsum(gaps, dtype=np.uint64).view(np.int64), tfs
 
 
+def decode_postings_flat(
+    data: np.ndarray, offsets: np.ndarray, df: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY posting lists in one pass -> (doc int64, tf int64,
+    group_starts int64[n]).
+
+    ``data``: flat uint8 buffer holding the lists back to back; list k is
+    ``data[offsets[k]:offsets[k+1]]`` with ``df[k]`` postings. One
+    varbyte_decode covers every list; the gap cumsum restarts at each
+    list's first posting (its first gap is an absolute doc key). List k's
+    postings are ``doc[group_starts[k] : group_starts[k] + df[k]]``."""
+    df = np.asarray(df, dtype=np.int64)
+    g = np.zeros(df.size, dtype=np.int64)
+    np.cumsum(df[:-1], out=g[1:])
+    n = int(df.sum())
+    o = np.asarray(offsets, dtype=np.int64)
+    stream = varbyte_decode(data[int(o[0]) : int(o[-1])])
+    if stream.size != 2 * n:
+        raise ValueError(
+            f"posting buffers hold {stream.size} varints but df implies {2 * n}"
+        )
+    gaps = stream[0::2]
+    c = np.cumsum(gaps, dtype=np.uint64)
+    # c at each list start minus its own (absolute) first gap = the running
+    # sum of all earlier lists, subtracted back out of the whole list
+    nz = df > 0
+    base = c[g[nz]] - gaps[g[nz]]
+    doc = (c - np.repeat(base, df[nz])).view(np.int64)
+    return doc, stream[1::2].astype(np.int64), g
+
+
 def decode_block(
     blob: bytes,
     block_idx: int,

@@ -19,11 +19,13 @@ re-expression over snapshot tables:
   per-term df still counts them — exactly Lucene's deleted-docs-affect-
   docFreq-until-merge semantics; compaction restores bit-equality with a
   from-scratch build (asserted in tests).
-- ``compact`` — physically applies tombstones: decode -> drop -> re-encode
-  every affected posting list (mapInPandas, no raw text required because
-  postings carry (doc, tf) and block metadata bounds doclen), rewrite docs
-  tables, refresh manifest lineage, clear tombstones. After compact + merge, global stats and df
-  are exactly those of a from-scratch build of the merged corpus.
+- ``compact`` — physically applies tombstones: decode -> drop -> renumber
+  -> re-encode every posting list of an affected unit (a vectorized
+  mapInArrow pass over row windows; no raw text required because postings
+  carry (doc, tf) and the docs table holds doclen), rewrite docs tables,
+  refresh manifest lineage, clear tombstones. After compact + merge, global
+  stats and df are exactly those of a from-scratch build of the merged
+  corpus.
 
 Analogy map: tombstone-aware reads = OpenSearch versioned upsert/delete;
 compact = Lucene segment merge expunging deletes.
@@ -34,15 +36,21 @@ from __future__ import annotations
 import glob
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import manifest, merge
+from . import codecs, manifest, merge
 from .build import (
+    DOCS_SCHEMA,
     ORD_SHIFT,
     PARTIAL_FULL_SCHEMA,
     SEG_SCHEMA,
+    _arrow_seg_schema,
+    _binary_from_flat,
+    _binary_parts,
+    _list_from_flat,
     _splice_merge_fn,
     build_unit,
     docs_path,
@@ -67,11 +75,16 @@ def _tombstone_files(index_dir: str) -> list[str]:
     )
 
 
+# the schema every tombstone writer produces; reading with it skips the
+# Spark job that parquet schema inference would launch
+TOMBSTONE_SCHEMA = "doc_id bigint, snapshot bigint"
+
+
 def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     files = _tombstone_files(index_dir)
     if not files:
         return None
-    return spark.read.parquet(*files)
+    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(*files)
 
 
 def load_tombstones(index_dir: str):
@@ -590,7 +603,7 @@ def merge_units(
 
     recover_folds(spark, index_dir)
     if _tombstone_files(index_dir):
-        compact(spark, index_dir, partitions=partitions)
+        compact(spark, index_dir)
     partitions = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     m = manifest.read_manifest(index_dir)
     m = m[m["status"] == manifest.STATUS_COMPLETED]
@@ -750,175 +763,277 @@ class _OrdSetFile:
         return self._arr
 
 
-def compact(spark: SparkSession, index_dir: str, partitions: int | None = None) -> dict:
+# postings per row window of compact's rewrite: bounds a Python worker's
+# flat decode arrays (a few dozen bytes a posting at peak) and keeps each
+# rewritten Binary column far below Arrow's int32 offsets. A single longer
+# list is a window of its own.
+_COMPACT_WINDOW_POSTINGS = 1 << 20
+
+
+def _renumber(ords, tomb, below=None):
+    """Closed-form compaction renumbering (see ``compact``): each surviving
+    ordinal drops by the number of tombstoned ordinals below it in its
+    stripe. ``tomb``: sorted tombstoned ordinals; ``below``:
+    ``searchsorted(tomb, ords)`` when the caller already has it."""
+    if below is None:
+        below = np.searchsorted(tomb, ords)
+    stripe_start = (ords >> ORD_SHIFT) << ORD_SHIFT
+    return ords - (below - np.searchsorted(tomb, stripe_start))
+
+
+def _survivors(ords, tomb):
+    """One sorted-set membership test -> (keep mask of the ``ords`` not in
+    the sorted tombstoned ordinals ``tomb``, ``searchsorted(tomb, ords)``
+    for ``_renumber``)."""
+    below = np.searchsorted(tomb, ords)
+    keep = np.ones(ords.size, dtype=bool)
+    inside = below < tomb.size
+    keep[inside] = tomb[below[inside]] != ords[inside]
+    return keep, below
+
+
+def _row_windows(df, limit: int):
+    """[a, b) row windows of a batch holding at most ``limit`` postings
+    each (by the rows' df); a row over the limit is its own window."""
+    cum = np.cumsum(df)
+    a = 0
+    while a < df.size:
+        done = int(cum[a - 1]) if a else 0
+        b = max(int(np.searchsorted(cum, done + limit, "right")), a + 1)
+        yield a, b
+        a = b
+
+
+def _compact_batch(batch, tomb, dl_of, pid: int):
+    """One record batch of segment rows -> its compacted rows, or None when
+    the tombstones empty every list. One flat pass: decode all lists
+    (codecs.decode_postings_flat), drop tombstoned ordinals (one sorted-set
+    membership test), renumber survivors (``_renumber``), drop emptied
+    lists and re-encode the rest with the build's flat group encoders.
+    ``tomb``: sorted tombstoned ordinals of the unit; ``dl_of``: old
+    ordinals -> doclens (exact block_min_dl); ``pid``: the rows' part_id."""
+    df = batch.column("df").to_numpy(zero_copy_only=False).astype(np.int64)
+    post_o, post_d = _binary_parts(batch.column("postings"))
+    doc, tf, g = codecs.decode_postings_flat(post_d, post_o, df)
+    keep, below = _survivors(doc, tomb)
+    kept = np.zeros(doc.size + 1, dtype=np.int64)
+    np.cumsum(keep, out=kept[1:])
+    new_df = kept[g + df] - kept[g]
+    live = np.flatnonzero(new_df)
+    if live.size == 0:
+        return None
+    starts = np.zeros(live.size, dtype=np.int64)
+    np.cumsum(new_df[live][:-1], out=starts[1:])
+    old = doc[keep]
+    enc = codecs.encode_groups_flat(
+        starts, _renumber(old, tomb, below[keep]), tf[keep], dl_of(old)
+    )
+
+    # positions: decoded flat for the lists that carry them, masked per
+    # posting with np.repeat(keep, tf); lists without positions stay empty
+    pos_o, pos_d = _binary_parts(batch.column("positions"))
+    has_pos = pos_o[1:] > pos_o[:-1]
+    pos_off = np.zeros(live.size + 1, dtype=np.int64)
+    pos_blob = b""
+    if has_pos.any():
+        pm = np.repeat(has_pos, df)
+        pos = codecs.decode_positions(pos_d, tf[pm])
+        pos_kept = pos[np.repeat(keep[pm], tf[pm])]
+        live_pos = has_pos[live]
+        pstarts = np.zeros(int(live_pos.sum()), dtype=np.int64)
+        np.cumsum(new_df[live[live_pos]][:-1], out=pstarts[1:])
+        pos_blob, offs = codecs.encode_position_groups_flat(
+            pstarts, tf[keep & pm], pos_kept
+        )
+        lens = np.zeros(live.size, dtype=np.int64)
+        lens[live_pos] = offs[1:] - offs[:-1]
+        np.cumsum(lens, out=pos_off[1:])
+
+    take = pa.array(live)
+    blk = enc["blk_row_offsets"]
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("term").take(take),
+            batch.column("salt").take(take),
+            pa.array(np.full(live.size, pid, dtype=np.int32)),
+            pa.array(enc["df"]),
+            pa.array(enc["cf"]),
+            _list_from_flat(blk, enc["blk_last_doc"], pa.int64()),
+            _list_from_flat(blk, enc["blk_max_tf"], pa.int32()),
+            _list_from_flat(blk, enc["blk_min_dl"], pa.int32()),
+            _list_from_flat(blk, enc["blk_offset"], pa.int64()),
+            _binary_from_flat(enc["blob"], enc["post_offsets"]),
+            _binary_from_flat(pos_blob, pos_off),
+        ],
+        schema=_arrow_seg_schema(),
+    )
+
+
+def _compact_batches(batches, tomb, dl_of, pid: int, window: int | None = None):
+    """``_compact_batch`` over every batch, cut into row windows of at most
+    ``window`` postings (default ``_COMPACT_WINDOW_POSTINGS``)."""
+    window = window or _COMPACT_WINDOW_POSTINGS
+    for b in batches:
+        df = b.column("df").to_numpy(zero_copy_only=False)
+        for a, z in _row_windows(df, window):
+            out = _compact_batch(b.slice(a, z - a), tomb, dl_of, pid)
+            if out is not None:
+                yield out
+
+
+def _make_compact_fn(index_dir: str, unit: int, ord_set: _OrdSetFile):
+    """mapInArrow function of compact's segment rewrite for one unit
+    (``_compact_batches``). part_id is the task's partition id, which names
+    the file the task writes (query._unit_seg_pdf)."""
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        from .query import _sidecar
+
+        tomb = ord_set.value
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else -1
+        # the PRE-compact docs sidecar supplies true doclens for exact
+        # block_min_dl metadata (the rewrite lands in a tmp dir and swaps
+        # in afterwards, so the old files are still in place)
+        dl_of = _sidecar(index_dir, unit).dl_of
+        yield from _compact_batches(batches, tomb, dl_of, pid)
+
+    return fn
+
+
+def _make_docs_compact_fn(ord_set: _OrdSetFile):
+    """mapInArrow function of compact's docs rewrite: drops the rows whose
+    ordinal is tombstoned and gives the rest the postings' closed-form
+    renumbering."""
+
+    def fn(batches):
+        tomb = ord_set.value
+        for b in batches:
+            i = b.schema.get_field_index("ord")
+            o = b.column(i).to_numpy(zero_copy_only=False).astype(np.int64)
+            keep, below = _survivors(o, tomb)
+            if not keep.any():
+                continue
+            b = b.filter(pa.array(keep))
+            new = _renumber(o[keep], tomb, below[keep])
+            yield b.set_column(i, b.schema.field(i), pa.array(new))
+
+    return fn
+
+
+def compact(spark: SparkSession, index_dir: str) -> dict:
     """Physically expunge tombstoned docs from every unit, then clear
-    tombstones. Posting lists are rewritten by decode -> filter -> RENUMBER
-    -> encode inside an Arrow-grouped UDF; empty lists are dropped; docs
-    tables are filtered and renumbered. Manifest rows are refreshed (same
-    unit ids, updated counts).
+    tombstones and re-merge. Each unit with tombstones costs three Spark
+    actions, all writes:
+
+    1. ords: the unit's tombstoned doc_ids become ORDINALS (a broadcast
+       semi-join against its docs table) in a small parquet set the tasks
+       read (``_OrdSetFile``). A unit whose write observes 0 rows is
+       skipped.
+    2. segments: a mapInArrow rewrite in row windows of at most
+       ``_COMPACT_WINDOW_POSTINGS`` postings. Each window is decoded flat,
+       masked, renumbered and re-encoded in one vectorized pass
+       (``_compact_batch``); lists left empty are dropped. Every list is
+       rewritten, tombstone-free ones too: survivors shift down past the
+       holes.
+    3. docs: a mapInArrow pass drops the rows with tombstoned ordinals
+       and renumbers the rest alike.
+
+    The new row count and doclen sum (docs write) and term rows and
+    postings bytes (segment write) come from ``.observe`` on the writes
+    and refresh the unit's manifest row (same unit id) after the rewritten
+    directories swap in.
 
     Renumbering (format v3): ordinals are dense ranks within hash stripes,
     so removing docs leaves holes; compact re-ranks the survivors exactly
     like Lucene's merge renumbers docIDs. Because pre-compact ordinals are
-    dense, the new ordinal is CLOSED-FORM from the (small, broadcast)
-    tombstone set alone: new = ord - (# tombstoned ordinals in the same
-    stripe below ord) — no unit-sized mapping ships anywhere, and the
-    result is bit-identical to a from-scratch build of the live corpus
-    (asserted in tests)."""
+    dense, the new ordinal is CLOSED-FORM from the tombstone set alone:
+    new = ord - (# tombstoned ordinals in the same stripe below ord) — no
+    unit-sized mapping ships anywhere, and the result is bit-identical to
+    a from-scratch build of the live corpus (asserted in tests)."""
     tombs = load_tombstones(index_dir)
     if tombs is None:
         return {"compacted_units": [], "removed_docs": 0}
-    import numpy as np
+    import shutil
+    import time
 
-    tomb_docs, tomb_snaps = tombs
+    from pyspark.sql import Observation
+
+    from .metrics import write_metrics
+
+    _, tomb_snaps = tombs
     usnap = unit_snapshots(index_dir)
     m = manifest.read_manifest(index_dir)
     units = sorted(int(u) for u in m[m["status"] == manifest.STATUS_COMPLETED]["unit"])
-
-    def make_rewrite(tomb_bc, unit):
-        return lambda batches: rewrite(batches, tomb_bc, unit)
-
-    def rewrite(batches, tomb_bc, unit):
-        import numpy as np
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from . import codecs
-        from .query import _sidecar
-
-        # tombstoned ORDINALS of this unit (postings are ordinal-keyed in
-        # format v3; the driver translated doc_ids via the docs sidecar)
-        t = np.asarray(tomb_bc.value, dtype=np.int64)
-        # stripe starts of the tombstoned ords, for the closed-form
-        # renumbering (see compact docstring)
-        from .build import ORD_SHIFT
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-
-        def renumber(ords):
-            stripe_start = (ords >> np.int64(ORD_SHIFT)) << np.int64(ORD_SHIFT)
-            cnt = np.searchsorted(t, ords) - np.searchsorted(t, stripe_start)
-            return ords - cnt
-
-        # the PRE-compact docs sidecar supplies true doclens for exact
-        # block_min_dl metadata in the rewritten lists (reads the old files
-        # — the rewrite lands in a tmp dir and swaps in afterwards)
-        sc = _sidecar(index_dir, unit)
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                doc, tf = codecs.decode_postings(r.postings, int(r.df))
-                keep = ~np.isin(doc, t, assume_unique=True)
-                if not keep.any():
-                    continue
-                # every list is re-encoded (even tombstone-free ones): all
-                # surviving ordinals shift down past the holes
-                enc = codecs.encode_postings(
-                    renumber(doc[keep]), tf[keep], sc.dl_of(doc[keep])
-                )
-                positions = b""
-                if isinstance(r.positions, (bytes, bytearray)) and len(r.positions):
-                    pos = codecs.decode_positions(r.positions, tf)
-                    pos_keep = np.repeat(keep, tf)
-                    positions = codecs.encode_position_groups(
-                        np.array([0]), tf[keep], pos[pos_keep]
-                    )[0]
-                out.append(
-                    {
-                        "Index": 0,
-                        "term": r.term,
-                        "salt": int(r.salt),
-                        "part_id": pid,
-                        "df": enc["df"],
-                        "cf": enc["cf"],
-                        "block_last_doc": enc["block_last_doc"].tolist(),
-                        "block_max_tf": enc["block_max_tf"].tolist(),
-                        "block_min_dl": enc["block_min_dl"].tolist(),
-                        "block_offset": enc["block_offset"].tolist(),
-                        "postings": enc["postings"],
-                        "positions": positions,
-                    }
-                )
-            pdf_out = pd.DataFrame(out)
-            if len(pdf_out):
-                yield pdf_out.drop(columns=["Index"], errors="ignore")
-
     tomb_all = read_tombstones(spark, index_dir)
-    removed_total = 0
+    phases = dict.fromkeys(("ords", "segments", "docs", "merge"), 0.0)
+    compacted: list[int] = []
+    removed_total = term_rows = postings_bytes = 0
     for u in units:
         # unit-scoped tombstones: only docs superseded by a LATER snapshot
-        unit_tomb = tomb_docs[tomb_snaps > usnap.get(u, 0)]
-        if unit_tomb.size == 0:
+        if not (tomb_snaps > usnap.get(u, 0)).any():
             continue
         seg_dir = os.path.join(segments_path(index_dir), f"unit={u}")
         doc_dir = os.path.join(docs_path(index_dir), f"unit={u}")
-        docs = spark.read.parquet(doc_dir)
-        n_before = docs.count()
-        # docs-table tombstone application: broadcast ANTI-JOIN on doc_id
+        docs = spark.read.schema(DOCS_SCHEMA).parquet(doc_dir)
+        # tombstoned doc_ids -> ordinals by a broadcast semi-join on doc_id
         # (never a literal IN list in the plan — a million tombstones would
         # otherwise explode the plan tree)
         unit_tomb_df = F.broadcast(
             tomb_all.filter(F.col("snapshot") > F.lit(usnap.get(u, 0))).select("doc_id")
         )
-        docs_kept = docs.join(unit_tomb_df, "doc_id", "left_anti")
-        stats = docs_kept.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("sum_dl")
-        ).collect()[0]
-        n_after = int(stats["n"])
-        if n_after == n_before:
-            continue  # unit untouched by tombstones
-        removed_total += n_before - n_after
 
-        # posting-level filter: translate the unit's tombstoned doc_ids to
-        # ORDINALS (distributed semi-join against the docs sidecar — the
-        # translation set is tombstone-sized, never unit-sized) and WRITE
-        # the set to shared storage; tasks read it directly (_OrdSetFile),
-        # so even a bulk delete of half a unit never stages its ordinals
-        # through the driver
+        t0 = time.perf_counter()
         ords_dir = os.path.join(index_dir, f".compact-ords-unit={u}")
+        ords_obs = Observation()
         (
             docs.join(unit_tomb_df, "doc_id", "left_semi")
             .select("ord")
+            .observe(ords_obs, F.count(F.lit(1)).alias("n"))
             .write.mode("overwrite")
             .parquet(ords_dir)
         )
-        tomb_bc = _OrdSetFile(ords_dir)
-        seg = spark.read.parquet(seg_dir)
-        new_seg = seg.mapInPandas(make_rewrite(tomb_bc, u), schema=SEG_SCHEMA)
+        removed = int(ords_obs.get["n"])
+        phases["ords"] += time.perf_counter() - t0
+        if removed == 0:
+            shutil.rmtree(ords_dir, ignore_errors=True)
+            continue  # unit untouched by tombstones
+        ord_set = _OrdSetFile(ords_dir)
+
+        t0 = time.perf_counter()
         tmp_seg, tmp_doc = seg_dir + ".compact", doc_dir + ".compact"
-        new_seg.write.mode("overwrite").parquet(tmp_seg)
-        # docs sidecar gets the SAME closed-form ordinal renumbering the
-        # posting rewrite applies (see compact docstring)
-        from .build import ORD_SHIFT as _OS
+        seg_obs = Observation()
+        (
+            spark.read.schema(SEG_SCHEMA).parquet(seg_dir)
+            .mapInArrow(_make_compact_fn(index_dir, u, ord_set), schema=SEG_SCHEMA)
+            .observe(
+                seg_obs,
+                F.count(F.lit(1)).alias("terms"),
+                F.sum(F.length("postings")).alias("bytes"),
+            )
+            .write.mode("overwrite")
+            .parquet(tmp_seg)
+        )
+        phases["segments"] += time.perf_counter() - t0
 
-        def make_docs_renumber(_bc, _shift=_OS):
-            def fn(batches):
-                import numpy as np
-
-                tt = np.asarray(_bc.value, dtype=np.int64)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    o = pdf["ord"].to_numpy(dtype="int64")
-                    ss = (o >> np.int64(_shift)) << np.int64(_shift)
-                    pdf = pdf.copy()
-                    pdf["ord"] = o - (
-                        np.searchsorted(tt, o) - np.searchsorted(tt, ss)
-                    )
-                    yield pdf
-
-            return fn
-
-        docs_kept.mapInPandas(
-            make_docs_renumber(tomb_bc), schema=docs_kept.schema
-        ).write.mode("overwrite").parquet(tmp_doc)
-
-        seg_stats = spark.read.parquet(tmp_seg).agg(
-            F.count(F.lit(1)).alias("terms"), F.sum(F.length("postings")).alias("bytes")
-        ).collect()[0]
-
-        import shutil
+        t0 = time.perf_counter()
+        # compacted docs tables lead with doc_id
+        docs_in = docs.select("doc_id", *[c for c in docs.columns if c != "doc_id"])
+        docs_obs = Observation()
+        (
+            docs_in.mapInArrow(_make_docs_compact_fn(ord_set), schema=docs_in.schema)
+            .observe(
+                docs_obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum("doclen").alias("sum_dl"),
+            )
+            .write.mode("overwrite")
+            .parquet(tmp_doc)
+        )
+        phases["docs"] += time.perf_counter() - t0
+        seg_stats, doc_stats = seg_obs.get, docs_obs.get
 
         shutil.rmtree(seg_dir)
         os.rename(tmp_seg, seg_dir)
@@ -937,15 +1052,17 @@ def compact(spark: SparkSession, index_dir: str, partitions: int | None = None) 
                 # omitting it would null the column and crash search_ranged
                 "ord_partitions": int(old["ord_partitions"]),
                 "input_snapshot_id": int(old["input_snapshot_id"]),
-                "row_count": n_after,
-                "sum_doclen": int(stats["sum_dl"] or 0),
+                "row_count": int(doc_stats["n"]),
+                "sum_doclen": int(doc_stats["sum_dl"] or 0),
                 "term_count": int(seg_stats["terms"] or 0),
                 "bytes": int(seg_stats["bytes"] or 0),
                 "status": manifest.STATUS_COMPLETED,
             },
         )
-
-    import shutil
+        compacted.append(u)
+        removed_total += removed
+        term_rows += int(seg_stats["terms"] or 0)
+        postings_bytes += int(seg_stats["bytes"] or 0)
 
     d = tombstones_path(index_dir)
     for f in glob.glob(os.path.join(d, "*.parquet")):
@@ -954,9 +1071,17 @@ def compact(spark: SparkSession, index_dir: str, partitions: int | None = None) 
         os.path.join(d, ".staging-*")  # crashed-write leftovers
     ):
         shutil.rmtree(sub, ignore_errors=True)
+    t0 = time.perf_counter()
     merge.merge_index(spark, index_dir)
-    from .metrics import write_metrics
+    phases["merge"] = time.perf_counter() - t0
 
-    res = {"compacted_units": units, "removed_docs": removed_total}
-    write_metrics(index_dir, "compact", res)
+    res = {
+        "compacted_units": compacted,
+        "removed_docs": removed_total,
+        "phase_secs": {k: round(v, 2) for k, v in phases.items()},
+    }
+    write_metrics(
+        index_dir, "compact",
+        {**res, "term_rows": term_rows, "postings_bytes": postings_bytes},
+    )
     return res

@@ -637,11 +637,14 @@ def _split_must_not(pdf, neg_terms):
     if not m.any():
         return pdf, None
     neg = pdf[m]
-    docs = [
-        codecs.decode_postings(r.postings, int(r.df))[0] for r in neg.itertuples()
-    ]
-    nd = np.unique(np.concatenate(docs)) if docs else None
-    return pdf[~m], nd
+    blobs = neg["postings"].tolist()
+    offs = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offs[1:])
+    doc, _, _ = codecs.decode_postings_flat(
+        np.frombuffer(b"".join(blobs), dtype=np.uint8), offs,
+        neg["df"].to_numpy(dtype=np.int64),
+    )
+    return pdf[~m], np.unique(doc)
 
 
 def _merge_excludes(a, b):

@@ -244,7 +244,7 @@ def test_fold_preserves_positional_queries(spark, tmp_path):
         spark, idx,
         spark.createDataFrame([(int(d),) for d in dropped], "doc_id long"),
     )
-    incremental.compact(spark, idx, partitions=4)
+    incremental.compact(spark, idx)
     merge.merge_index(spark, idx)
     after = snap()
     for part in after:

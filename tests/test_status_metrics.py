@@ -63,8 +63,12 @@ def test_status_and_metrics_lifecycle(spark, tmp_path, capsys):
     assert st2["tombstone_debt"] == 0
     assert st2["n_units"] == 1
     assert st2["docs"] == 30
-    verbs = [r["verb"] for r in metrics.read_metrics(idx)]
-    assert verbs[-2:] == ["compact", "merge-units"]
+    recs = metrics.read_metrics(idx)
+    assert [r["verb"] for r in recs][-2:] == ["compact", "merge-units"]
+    crec = recs[-2]
+    assert crec["removed_docs"] == 5
+    assert set(crec["phase_secs"]) == {"ords", "segments", "docs", "merge"}
+    assert crec["term_rows"] > 0 and crec["postings_bytes"] > 0
 
     # CLI surface prints the same JSON
     assert cli.main(["status", "--index", idx, "--latest-snapshot", "5"]) == 0
