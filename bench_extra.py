@@ -75,9 +75,9 @@ def main():
             stats = merge.load_stats(index_dir)
             t_stats = time.time() - t0
             t0 = time.time()
-            idfs = query._term_idfs(
+            idfs = query._term_stats(
                 spark, index_dir, sorted(set(q["terms"])), stats["n_docs"]
-            )
+            )[0]
             t_lex = time.time() - t0
             t0 = time.time()
             sc.setJobDescription(f"search q{q['query_id']}")

@@ -920,14 +920,20 @@ _SEG_PART_TARGET_BYTES = int(
 )
 _PARTIAL_BYTES_PER_POSTING = 8
 
-# row-group byte bound for segment parquet files (see the write site).
-# Segment reads are POINT lookups (term IN over term-sorted files), so
-# small groups maximize row-group pruning; 1 MB measured best on the
-# 50-query pass with no build cost (vs whole-file decompression at the
-# parquet default 128 MB).
-_SEG_ROWGROUP_BYTES = int(
-    os.environ.get("PGSPARK_SEG_ROWGROUP_BYTES", 1 << 20)
-)
+# row-group byte bound for segment parquet files (every segment write:
+# build, compaction, fold). A driver-tier segment read decodes only the
+# row groups whose footer term range holds a query term (termindex), so a
+# group is the unit of read cost; the parquet default 128 MB made every
+# read decompress whole files. Swept with footer-addressed reads on the
+# perfbench base indexes, seeds 1 and 2 (4-core host, top-k list x 3),
+# at 256 KB / 512 KB / 1 MB / 2 MB:
+#   longtail    top-k p50 6.2-6.3 / 6.2-7.5 / 8.9-9.3 / 11.1-11.7 ms,
+#               index bytes +4.4 / +1.7 / 0 / -1.3 %
+#   head_ingest top-k p50 5.8-6.4 / 6.3-6.7 / 7.6 / 7.5-7.7 ms,
+#               index bytes +4.6-4.9 / +1.6-1.9 / 0 / +0.1 %
+# 1 MB keeps the index size; 512 KB would buy 1-2 ms of p50 for +1.7 %
+# of bytes, a trade left to a change that owns the size budget.
+SEG_ROWGROUP_BYTES = 1 << 20
 
 
 def _seg_shuffle_width(unit_est_postings, partitions: int) -> int:
@@ -1642,7 +1648,8 @@ def build_unit(
         # counts are O(distinct terms), not O(postings). Hash repartition
         # (no range-sampler pass); sortWithinPartitions keeps every output
         # FILE term-sorted so parquet row-group min/max stats stay selective
-        # for the query-time term IN (...) pushdown; first_doc in the sort
+        # for query-time term lookups (termindex on the driver tier, the
+        # IN pushdown on executors); first_doc in the sort
         # key is the splice order. The SEGMENTS job runs FIRST: its
         # `partitions`-wide shuffle-map stage is what populates the
         # tokenize cache, so the docs job below can coalesce its output to
@@ -1659,15 +1666,15 @@ def build_unit(
                 F.sum(F.length("postings")).alias("bytes"),
             )
         )
-        # bounded parquet row groups keep the query-time term IN (...) read
-        # selective INSIDE a file (guide §6): files are term-sorted, so
-        # each ~1 MB row group (_SEG_ROWGROUP_BYTES) spans a narrow term
-        # range and min/max stats prune the rest — essential once
-        # bytes-adaptive widths produce multi-GB segment files at real
-        # scale (the default 128 MB groups would make every term lookup
-        # decompress 128 MB)
+        # bounded parquet row groups keep a query's segment read selective
+        # INSIDE a file (guide §6): files are term-sorted, so each row
+        # group (SEG_ROWGROUP_BYTES) spans a narrow term range, and the
+        # driver tier reads only the groups whose footer range holds a
+        # query term (termindex); Spark's scan prunes by the same min/max
+        # statistics. Essential once bytes-adaptive widths produce
+        # multi-GB segment files at real scale.
         segments.write.mode("overwrite").option(
-            "parquet.block.size", str(_SEG_ROWGROUP_BYTES)
+            "parquet.block.size", str(SEG_ROWGROUP_BYTES)
         ).parquet(
             os.path.join(segments_path(index_dir), f"unit={unit}")
         )

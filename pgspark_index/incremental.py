@@ -46,6 +46,7 @@ from .build import (
     DOCS_SCHEMA,
     ORD_SHIFT,
     PARTIAL_FULL_SCHEMA,
+    SEG_ROWGROUP_BYTES,
     SEG_SCHEMA,
     _arrow_seg_schema,
     _binary_from_flat,
@@ -654,7 +655,9 @@ def merge_units(
             F.sum(F.length("postings")).alias("bytes"),
         )
     )
-    folded.write.mode("overwrite").parquet(seg_stage)
+    folded.write.mode("overwrite").option(
+        "parquet.block.size", str(SEG_ROWGROUP_BYTES)
+    ).parquet(seg_stage)
     phases["fold_segments"] = round(_time.time() - _t0, 2)
 
     _t0 = _time.time()
@@ -883,8 +886,9 @@ def _compact_batches(batches, tomb, dl_of, pid: int, window: int | None = None):
 
 def _make_compact_fn(index_dir: str, unit: int, ord_set: _OrdSetFile):
     """mapInArrow function of compact's segment rewrite for one unit
-    (``_compact_batches``). part_id is the task's partition id, which names
-    the file the task writes (query._unit_seg_pdf)."""
+    (``_compact_batches``). part_id is the task's partition id: every row
+    of the file the task writes carries it, and the driver tier picks the
+    file by its footer part_id range (termindex)."""
 
     def fn(batches):
         from pyspark import TaskContext
@@ -1014,6 +1018,7 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
                 F.sum(F.length("postings")).alias("bytes"),
             )
             .write.mode("overwrite")
+            .option("parquet.block.size", str(SEG_ROWGROUP_BYTES))
             .parquet(tmp_seg)
         )
         phases["segments"] += time.perf_counter() - t0

@@ -25,6 +25,15 @@ from . import manifest
 from .build import segments_path
 
 LEXICON_COLS = ["term", "df_total", "cf_total", "entries"]
+# rows per lexicon parquet row group. A term lookup (query._term_stats,
+# through termindex) decodes the groups whose footer term range holds a
+# query term, so a group is the unit of lookup cost: with Spark's default
+# 128 MB groups each lexicon file was one group of 70-81k rows, and every
+# lookup decoded whole files. Swept on the perfbench longtail seed 1 base
+# index (288k terms, 4 files; 4-core host, 35-query top-k list x 2):
+# lookup p50 1.9 / 2.4 / 3.0 / 19.3 ms and lexicon bytes +1.7 / +0.8 /
+# +0.4 / 0 % at 2,048 / 4,096 / 8,192 rows / one group per file.
+LEXICON_ROWGROUP_ROWS = 2048
 
 
 def lexicon_path(index_dir: str) -> str:
@@ -52,8 +61,11 @@ def read_segments(spark: SparkSession, index_dir: str) -> DataFrame:
 def merge_index(spark: SparkSession, index_dir: str, lexicon_partitions: int | None = None) -> dict:
     """Build lexicon parquet + stats.json from committed segments.
 
-    One shuffle on term; output range-partitioned and sorted by term so
-    query-time term lookups hit few row groups (parquet min/max pruning)."""
+    One shuffle on term; output range-partitioned and sorted by term, in
+    row groups of ``LEXICON_ROWGROUP_ROWS``, so a query-time term lookup
+    reads only the groups whose footer term range holds the term
+    (``termindex``). Each row's ``entries`` are sorted by (unit, salt,
+    part_id), so two merges of one index write the same rows."""
     seg = read_segments(spark, index_dir).select(
         "term", "unit", "salt", "part_id", "df", "cf"
     )
@@ -70,11 +82,15 @@ def merge_index(spark: SparkSession, index_dir: str, lexicon_partitions: int | N
         .agg(
             F.sum("df").alias("df_total"),
             F.sum("cf").alias("cf_total"),
-            F.collect_list(F.struct("unit", "salt", "part_id", "df")).alias("entries"),
+            F.array_sort(
+                F.collect_list(F.struct("unit", "salt", "part_id", "df"))
+            ).alias("entries"),
         )
         .sortWithinPartitions("term")
     )
-    lex.write.mode("overwrite").parquet(lexicon_path(index_dir))
+    lex.write.mode("overwrite").option(
+        "parquet.block.row.count.limit", str(LEXICON_ROWGROUP_ROWS)
+    ).parquet(lexicon_path(index_dir))
 
     stats = manifest.global_stats(index_dir)
     adj = _tombstone_stat_adjustment(spark, index_dir)

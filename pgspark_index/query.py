@@ -1,9 +1,10 @@
 """Query engine: top-k BM25 over the segment index.
 
 Lifecycle (SURVEY.md §3.4):
-  driver: lexicon lookup for the query terms (parquet scan with an IN
-          pushdown over the term-sorted lexicon -> few rows) -> idf per
-          term from global df; global stats from lineage
+  driver: lexicon lookup for the query terms (``termindex``: only the
+          row groups of the term-sorted lexicon whose footer term range
+          holds a query term are read) -> idf per term from global df;
+          global stats from lineage
   executors: segments parquet scanned with term IN (...) pushdown — only
           the query terms' posting rows are read (row-group pruning works
           because segment files are written sorted by term) -> per-unit
@@ -25,7 +26,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
-from . import bm25, merge, wand
+from . import bm25, merge, termindex, wand
 from .build import docs_path, segments_path
 
 # ---- per-unit docs sidecar -----------------------------------------------
@@ -236,8 +237,8 @@ BATCH_RESULT_SCHEMA = "query_id int, doc_id bigint, score double"
 # total is small (bounded below), scheduling a Spark job (scan + shuffle +
 # Python workers + TakeOrdered: ~0.5 s of fixed cost at any data size)
 # dwarfs the work itself. Small queries therefore run entirely on the
-# driver: the SAME pyarrow term-IN segment read the executors would do
-# (row-group pruning via the term-sorted file layout), the SAME per-unit
+# driver: the same segment rows the executors would read (only the row
+# groups ``termindex`` selects from the footers), the SAME per-unit
 # kernel, the SAME (score DESC, doc_id ASC) merge — bit-identical results
 # (the kernels are order-insensitive: per-doc sums accumulate in sorted
 # term order, see wand._exact_topk). This is the coordinating-node shape
@@ -291,16 +292,6 @@ def _driver_tier_ok(
     return n * _POSTING_DECODE_BYTES <= cap
 
 
-_SEG_DS_CACHE: dict = {}
-# lexicon dataset cache: merge_index overwrites produce fresh file names
-# (Spark part-file UUIDs), so the file-list key rolls on any rewrite
-_LEX_DS_CACHE: dict = {}
-# in-memory term dictionary (see _term_stats): file-set -> (term -> row,
-# df numpy, entries arrow column); and the file-sets known to exceed the
-# driver byte gate, so they are stat'ed once, not per query
-_LEX_MEM_CACHE: dict = {}
-_LEX_MEM_TOO_BIG: set = set()
-
 _SEG_COLS = [
     "term", "df", "postings",
     "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
@@ -315,58 +306,31 @@ def _unit_seg_pdf(
     """Driver-side read of one unit's segment ``columns`` for ``terms`` ->
     pandas (the same columns the distributed scan selects).
 
-    ``part_ids``: the lexicon entries' (term -> part_id) pointers for the
-    query terms — the term-dictionary -> posting-file indirection. Segment
-    file ``part-<pid>-*`` is written by shuffle partition ``pid`` (its rows
-    carry that part_id), so the read opens ONLY the files that contain the
-    query terms' rows. Without the pointer (or if naming doesn't match), a
-    term-IN scan over a unit whose files each hold one wide-term-range row
-    group prunes nothing and decompresses the whole unit per query. The
-    dataset is cached per (file-set, selection); compaction swaps the dir,
-    which rolls the key."""
+    ``part_ids``: the lexicon entries' pointers for this unit, {term ->
+    part_ids} (``_unit_part_ids``) — the term-dictionary -> posting-file
+    indirection. ``termindex`` matches them against each file's footer
+    ``part_id`` range to pick the file holding each term (the unit's files
+    are hash-partitioned by term, so every file spans the vocabulary), and
+    the footer term ranges to pick the row groups inside it: the read
+    decodes the query terms' groups, not the unit. Without the pointers
+    every file is searched for every term."""
     import os as _os
-    import re as _re
-
-    import pyarrow.dataset as ds
 
     d = _os.path.join(segments_path(index_dir), f"unit={int(unit)}")
-    names = tuple(
-        sorted(fn for fn in _os.listdir(d) if fn.endswith(".parquet"))
-    )
-    sel = names
-    if part_ids is not None:
-        by_pid = {}
-        for fn in names:
-            m = _re.match(r"part-(\d+)-", fn)
-            if m is not None:
-                by_pid.setdefault(int(m.group(1)), fn)
-        picked = [by_pid.get(int(p)) for p in sorted(part_ids)]
-        if all(fn is not None for fn in picked):
-            sel = tuple(picked)
-    key = (d, names, sel)
-    dset = _SEG_DS_CACHE.get(key)
-    if dset is None:
-        dset = ds.dataset(
-            [_os.path.join(d, fn) for fn in sel], format="parquet"
-        )
-        if len(_SEG_DS_CACHE) >= 64:
-            _SEG_DS_CACHE.pop(next(iter(_SEG_DS_CACHE)))
-        _SEG_DS_CACHE[key] = dset
-    tab = dset.to_table(columns=columns, filter=ds.field("term").isin(terms))
-    return tab.to_pandas()
+    return termindex.read(d, terms, columns, part_ids).to_pandas()
 
 
 def _unit_part_ids(
     parts: dict, terms: list[str], units: list
-) -> dict[int, set[int]]:
-    """Lexicon entry pointers -> {unit: part_ids holding any query term}.
-    A unit with an empty set holds none of the terms and is skipped
+) -> dict[int, dict[str, set[int]]]:
+    """Lexicon entry pointers -> {unit: {term: part_ids holding it}}.
+    A unit with an empty mapping holds none of the terms and is skipped
     entirely (the distributed path's groupBy produces no group there)."""
-    out: dict[int, set[int]] = {int(u): set() for u in units}
+    out: dict[int, dict[str, set[int]]] = {int(u): {} for u in units}
     for t in terms:
         for u, pid in parts.get(t, ()):
             if int(u) in out:
-                out[int(u)].add(int(pid))
+                out[int(u)].setdefault(t, set()).add(int(pid))
     return out
 
 
@@ -524,84 +488,19 @@ def _term_stats(
     """Lexicon lookup. Missing terms are simply absent (score 0
     everywhere), like any search engine.
 
-    Read directly with pyarrow on the driver — the lexicon is range-
-    partitioned and sorted by term, so parquet row-group statistics prune
-    to a handful of row groups; no Spark job is scheduled for the (tiny)
-    lookup, which roughly halves single-query latency. The df and cf sides
-    feed the driver-tier byte gate, and the entries side its per-file read
-    targeting, at zero extra I/O.
+    Read directly with pyarrow on the driver, no Spark job: the lexicon is
+    range-partitioned and sorted by term and written in small row groups
+    (``merge.LEXICON_ROWGROUP_ROWS``), so ``termindex`` reads only the
+    groups whose footer term range holds a query term — a few thousand rows
+    however large the lexicon. The df and cf sides feed the driver-tier
+    byte gate at zero extra I/O.
 
     Returns (term -> idf, term -> global df, term -> [(unit, part_id)],
     term -> global cf)."""
     if not terms:
         return {}, {}, {}, {}
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.dataset as ds
-
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
-    key = tuple(files)
-
-    # In-memory term dictionary (byte-gated, same budget knob as the
-    # driver tier): when the whole lexicon parquet fits the driver budget,
-    # hold its arrow table + a term -> row dict and serve lookups with
-    # zero parquet I/O (~0.1 ms vs ~8 ms for the filtered read). Same
-    # rows, same ints -> bit-identical idf/df/parts. Beyond the gate the
-    # filtered pyarrow read below is unchanged (a 10^9-term lexicon never
-    # lands on the driver). Keyed on the file set: merges/compaction mint
-    # new file names, so a rewrite rolls the key — no cross-index reuse.
-    mem = _LEX_MEM_CACHE.get(key)
-    if mem is None and key not in _LEX_MEM_TOO_BIG:
-        # the retained structures (term -> row dict + decompressed arrow
-        # table) run ~8-15x the compressed parquet bytes, so the gate
-        # admits only lexicons whose EXPANDED size fits the driver budget
-        cap = _driver_tier_cap() // 8
-        if 0 < sum(_os.path.getsize(f) for f in files) <= cap:
-            full = ds.dataset(files, format="parquet").to_table(
-                columns=merge.LEXICON_COLS
-            )
-            row_of = {
-                t: i for i, t in enumerate(full["term"].to_pylist())
-            }
-            df_np = full["df_total"].to_numpy(zero_copy_only=False)
-            cf_np = full["cf_total"].to_numpy(zero_copy_only=False)
-            ents_col = full["entries"]
-            if len(_LEX_MEM_CACHE) >= 2:
-                _LEX_MEM_CACHE.pop(next(iter(_LEX_MEM_CACHE)))
-            mem = (row_of, df_np, cf_np, ents_col)
-            _LEX_MEM_CACHE[key] = mem
-        else:
-            if len(_LEX_MEM_TOO_BIG) >= 64:
-                _LEX_MEM_TOO_BIG.pop()
-            _LEX_MEM_TOO_BIG.add(key)
-    if mem is not None:
-        row_of, df_np, cf_np, ents_col = mem
-        idfs, dfs, parts, cfs = {}, {}, {}, {}
-        for t in terms:
-            i = row_of.get(t)
-            if i is None:
-                continue
-            df_total = int(df_np[i])
-            idfs[t] = float(bm25.idf(n_docs, df_total))
-            dfs[t] = df_total
-            cfs[t] = int(cf_np[i])
-            parts[t] = [
-                (int(e["unit"]), int(e["part_id"]))
-                for e in ents_col[i].as_py()
-            ]
-        return idfs, dfs, parts, cfs
-
-    dataset = _LEX_DS_CACHE.get(key)
-    if dataset is None:
-        dataset = ds.dataset(files, format="parquet")
-        if len(_LEX_DS_CACHE) >= 16:
-            _LEX_DS_CACHE.pop(next(iter(_LEX_DS_CACHE)))
-        _LEX_DS_CACHE[key] = dataset
-    table = dataset.to_table(
-        columns=merge.LEXICON_COLS, filter=ds.field("term").isin(terms)
+    table = termindex.read(
+        merge.lexicon_path(index_dir), terms, merge.LEXICON_COLS
     )
     idfs, dfs, parts, cfs = {}, {}, {}, {}
     for term, df_total, cf_total, ents in zip(
@@ -612,11 +511,6 @@ def _term_stats(
         cfs[term] = int(cf_total)
         parts[term] = [(int(e["unit"]), int(e["part_id"])) for e in ents]
     return idfs, dfs, parts, cfs
-
-
-def _term_idfs(spark: SparkSession, index_dir: str, terms: list[str], n_docs: int) -> dict[str, float]:
-    """Back-compat wrapper over ``_term_stats`` (idf side only)."""
-    return _term_stats(spark, index_dir, terms, n_docs)[0]
 
 
 def _split_must_not(pdf, neg_terms):
@@ -1112,7 +1006,7 @@ def search_ranged(
 
     stats = merge.load_stats(index_dir)
     terms = sorted(set(terms))
-    idfs = _term_idfs(spark, index_dir, terms, stats["n_docs"])
+    idfs = _term_stats(spark, index_dir, terms, stats["n_docs"])[0]
     present = sorted(idfs)
     if not present:
         return _local_df(spark, [], RESULT_SCHEMA)
@@ -1252,7 +1146,7 @@ def search_multifield(
     fields = sorted(field_indexes)
     stats = {f: merge.load_stats(field_indexes[f]) for f in fields}
     idfs = {
-        f: _term_idfs(spark, field_indexes[f], terms, stats[f]["n_docs"])
+        f: _term_stats(spark, field_indexes[f], terms, stats[f]["n_docs"])[0]
         for f in fields
     }
     if not any(idfs[f] for f in fields):
@@ -2434,7 +2328,7 @@ def explain_score(
     import numpy as np
 
     stats = merge.load_stats(index_dir)
-    idfs = _term_idfs(spark, index_dir, sorted(set(terms)), stats["n_docs"])
+    idfs = _term_stats(spark, index_dir, sorted(set(terms)), stats["n_docs"])[0]
     present = sorted(idfs)
     if not present:
         return spark.createDataFrame([], EXPLAIN_SCHEMA)
@@ -2742,7 +2636,7 @@ def score_all_matches(
 
     stats = merge.load_stats(index_dir)
     terms = sorted(set(terms))
-    idfs = _term_idfs(spark, index_dir, terms, stats["n_docs"])
+    idfs = _term_stats(spark, index_dir, terms, stats["n_docs"])[0]
     present = sorted(idfs)
     if not present:
         return _local_df(spark, [], RESULT_SCHEMA)
@@ -3288,14 +3182,9 @@ def term_vectors(
     tf comes from re-tokenizing the doc's text with the SAME pinned
     tokenizer the index was built with (JVM-side lower + regexp, the
     textnorm-equivalent spelling); df comes from the index lexicon
-    (driver-side pyarrow range lookup, no Spark job — same path as
-    ``_term_idfs``). A single-doc API is driver-bounded by nature: the
+    (driver-side ``termindex`` lookup, no Spark job — same path as
+    ``_term_stats``). A single-doc API is driver-bounded by nature: the
     Spark work is one pushed-down point filter on doc_id."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.dataset as ds
-
     tf_df = (
         docs_df.filter(F.col("doc_id") == int(doc_id))
         .select(
@@ -3307,13 +3196,10 @@ def term_vectors(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     terms = [r["term"] for r in tf_df.collect()]
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
     dfs: dict[str, int] = {}
-    if files and terms:
-        table = ds.dataset(files, format="parquet").to_table(
-            columns=["term", "df_total"], filter=ds.field("term").isin(terms)
+    if terms:
+        table = termindex.read(
+            merge.lexicon_path(index_dir), terms, ["term", "df_total"]
         )
         dfs = dict(
             zip(table["term"].to_pylist(),

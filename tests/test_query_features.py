@@ -163,7 +163,7 @@ def test_filtered_search_bounded_emission(spark, tmp_index):
         .toPandas()
     )
     stats = merge.load_stats(tmp_index)
-    idfs = query._term_idfs(spark, tmp_index, sorted(set(terms)), stats["n_docs"])
+    idfs = query._term_stats(spark, tmp_index, sorted(set(terms)), stats["n_docs"])[0]
     include = np.unique(np.fromiter(flt_ids, dtype=np.int64))
     for unit in sorted(seg_pdf["unit"].unique()):
         sub = seg_pdf[seg_pdf["unit"] == unit]

@@ -1,5 +1,5 @@
-"""Round-6 optimization internals: the driver-result DataFrame wrapper,
-the in-memory lexicon dictionary, and the bytes-adaptive partials width.
+"""Round-6 optimization internals: the driver-result DataFrame wrapper
+and the bytes-adaptive partials width.
 
 These pin the MECHANISMS the optimizations introduced; end-to-end result
 parity is pinned by test_driver_tier.py and the oracle gate.
@@ -78,29 +78,6 @@ def test_wrapper_is_dataframe_and_composable(spark):
     assert isinstance(df, DataFrame)
     out = df.filter(F.col("score") > 1.5).collect()
     assert [tuple(r) for r in out] == [(1, 2.0)]
-
-
-# ---- in-memory lexicon dictionary ------------------------------------------
-
-
-def test_lexicon_mem_cache_matches_filtered_read(spark, idx, monkeypatch):
-    stats = merge.load_stats(idx)
-    terms = ["alpha", "beta", "zz_missing"]
-    # byte gate large -> in-memory dictionary path
-    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", str(64 << 20))
-    query._LEX_MEM_CACHE.clear()
-    query._LEX_MEM_TOO_BIG.clear()
-    mem = query._term_stats(spark, idx, terms, stats["n_docs"])
-    assert query._LEX_MEM_CACHE  # the dictionary actually loaded
-    # byte gate below the file size -> filtered pyarrow read path
-    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", "1")
-    query._LEX_MEM_CACHE.clear()
-    query._LEX_MEM_TOO_BIG.clear()
-    fallback = query._term_stats(spark, idx, terms, stats["n_docs"])
-    assert not query._LEX_MEM_CACHE
-    assert mem == fallback  # bit-identical idf/df/entry pointers
-    assert "zz_missing" not in mem[0]
-    query._LEX_MEM_TOO_BIG.clear()
 
 
 # ---- bytes-adaptive partials width -----------------------------------------

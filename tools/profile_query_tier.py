@@ -2,7 +2,9 @@
 
 Builds a fresh sf-scale index, then profiles N repetitions of the 50-query
 set through query.search().collect(), printing cumulative hotspots. Also
-times the sub-phases of one representative query by hand.
+times the sub-phases of one representative query by hand, and prints, per
+query, the parquet row groups its lexicon and segment reads select against
+the row groups in the files they open (termindex's footer index).
 """
 
 from __future__ import annotations
@@ -18,8 +20,36 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pgspark_index import build, fixtures, merge, query  # noqa: E402
+from pgspark_index import build, fixtures, merge, query, termindex  # noqa: E402
 from pgspark_index.session import get_spark  # noqa: E402
+
+
+def row_groups(directory: str, terms: list[str], part_ids=None) -> tuple[int, int]:
+    """(row groups a lookup of ``terms`` reads, row groups in the files)."""
+    picked = sum(
+        f.metadata.num_row_groups if g is None else len(g)
+        for f, g in termindex.lookup(directory, terms, part_ids)
+    )
+    total = sum(f.metadata.num_row_groups for f in termindex._footers(directory))
+    return picked, total
+
+
+def print_row_groups(spark, index_dir: str, queries: list[dict]) -> None:
+    stats = merge.load_stats(index_dir)
+    seg_base = build.segments_path(index_dir)
+    for q in queries:
+        terms = sorted(set(q["terms"]))
+        _, _, parts, _ = query._term_stats(spark, index_dir, terms, stats["n_docs"])
+        up = query._unit_part_ids(parts, terms, stats["units"])
+        lex = row_groups(merge.lexicon_path(index_dir), terms)
+        seg = [
+            row_groups(os.path.join(seg_base, f"unit={u}"), terms, up[u])
+            for u in stats["units"]
+        ]
+        print(
+            f"q{q['query_id']} {terms}: lexicon {lex[0]}/{lex[1]} row groups, "
+            f"segments {sum(p for p, _ in seg)}/{sum(t for _, t in seg)}"
+        )
 
 
 def main():
@@ -43,6 +73,7 @@ def main():
         merge.merge_index(spark, index_dir)
         queries = fixtures.make_query_set(50, seed=123)
         query.search(spark, index_dir, queries[0]["terms"], 10).collect()  # warm
+        print_row_groups(spark, index_dir, queries)
 
         # manual sub-phase timing of one query, averaged over reps
         q = queries[0]
