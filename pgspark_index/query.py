@@ -178,7 +178,7 @@ def _sidecar(index_dir: str, unit: int) -> _UnitSidecar:
 
 
 # tombstone sets larger than this never ride task closures/broadcasts —
-# `search` switches to the distributed anti-join escalation path instead
+# `_run` switches to the distributed anti-join (`_drop_stale`) instead
 TOMBSTONE_CLOSURE_LIMIT = 1_000_000
 
 
@@ -245,11 +245,13 @@ BATCH_RESULT_SCHEMA = "query_id int, doc_id bigint, score double"
 # of a search engine: a query touching a few hundred KB of postings is one
 # node's work; the cluster is for the queries (and corpora) that aren't.
 #
-# The tier serves every family that goes through ``_execute`` with a k:
-# ``search`` (no filter_df, tombstones within TOMBSTONE_CLOSURE_LIMIT),
+# The tier serves every family that goes through ``_run`` with a k and
+# tombstones within TOMBSTONE_CLOSURE_LIMIT: ``search`` (the include and
+# complement filter tiers too — their ids are on the driver already),
 # ``search_after``, ``search_phrase``, ``search_phrase_prefix``,
 # ``search_proximity`` and ``search_min_should_match``; ``search_batch``
-# has its own driver branch under the same gate.
+# has its own driver branch under the same gate. Every-match calls
+# (k=None, ``score_all_matches``) stay distributed.
 #
 # The gate is a hard byte bound, not a heuristic: sum(df) over the query's
 # terms (already in hand from the lexicon lookup) x 16 B/posting decode
@@ -571,14 +573,15 @@ def _rows_to_lists(pdf, idfs: dict[str, float]) -> list[dict]:
 
 # ---- the per-unit executor -------------------------------------------------
 # Every scoring family is a spec: the terms it scores, the terms the
-# lexicon must hold, whether the kernel reads positions, and one per-unit
-# kernel with the wand scorer signature
+# lexicon must hold, whether the kernel reads positions, optional filter
+# doc-id sets, and one per-unit kernel with the wand scorer signature
 #     kernel(lists, avgdl, k, sc, exclude=None) -> (doc_ids, scores)
-# (k=None: every match). ``_plan`` runs the lexicon lookup and the
-# tombstone excluder once; ``_run`` then executes the same kernel either on
-# the driver tier or as one groupBy("unit").applyInPandas job, and builds
-# the result DataFrame. A doc's postings all live in its own unit, so unit
-# top-k emissions merge into the exact global top-k.
+# (k=None: every match; kernels of a filtered spec also take include=).
+# ``_plan`` runs the lexicon lookup and the tombstone excluder once; ``_run``
+# then executes the same per-unit body (``_unit_score``) either on the
+# driver tier or as one groupBy("unit").applyInPandas job (``_unit_frame``),
+# and builds the result DataFrame. A doc's postings all live in its own
+# unit, so unit top-k emissions merge into the exact global top-k.
 
 
 class _Spec(NamedTuple):
@@ -589,6 +592,8 @@ class _Spec(NamedTuple):
     min_terms: int = 1               # fewer present terms -> no match
     neg_terms: tuple = ()            # must_not: docs holding any are excluded
     positions: bool = False
+    include: object = None           # sorted doc ids: score only these
+    exclude_docs: object = None      # sorted doc ids: never emit these
 
 
 class _Plan(NamedTuple):
@@ -604,10 +609,11 @@ class _Plan(NamedTuple):
 
 def _plan(
     spark: SparkSession, index_dir: str, spec: _Spec,
-    tombstone_limit: int = TOMBSTONE_CLOSURE_LIMIT,
+    tombstone_limit: int | None = None,
 ) -> _Plan | None:
     """Lexicon lookup + tombstone excluder for ``spec`` -> None when no doc
-    can match (a required term or too many terms are absent)."""
+    can match (a required term or too many terms are absent).
+    ``tombstone_limit`` defaults to TOMBSTONE_CLOSURE_LIMIT, read per call."""
     stats = merge.load_stats(index_dir)
     idfs, dfs, parts, cfs = _term_stats(
         spark, index_dir, sorted(set(spec.terms) | set(spec.neg_terms)),
@@ -617,6 +623,8 @@ def _plan(
     idfs = {t: idfs[t] for t in spec.terms if t in idfs}
     if len(idfs) < spec.min_terms or any(t not in idfs for t in spec.required):
         return None
+    if tombstone_limit is None:
+        tombstone_limit = TOMBSTONE_CLOSURE_LIMIT
     excluder, _ = _tombstone_excluder_bounded(index_dir, tombstone_limit)
     return _Plan(stats, idfs, neg, dfs, cfs, parts, excluder)
 
@@ -631,32 +639,121 @@ def _seg_rows(spark: SparkSession, index_dir: str, plan: _Plan, cols: list[str])
     )
 
 
+def _unit_score(index_dir: str, spec: _Spec, plan: _Plan, k: int | None):
+    """The per-unit scoring body shared by the driver tier and the
+    distributed frame -> score(unit, pdf, include, exclude_docs) ->
+    (doc_ids, scores). The filter arrays are arguments, not closure state,
+    so the distributed side can pass a broadcast's value. Without a plan
+    excluder (tombstones over the closure limit) stale rows are left for
+    the caller's ``_drop_stale``."""
+    import numpy as np
+
+    kernel, idfs, neg, excluder = spec.kernel, plan.idfs, plan.neg, plan.excluder
+    avgdl = float(plan.stats["avgdl"])
+
+    def score(unit, pdf, include, exclude_docs):
+        sc = _sidecar(index_dir, unit)
+        # neg docs decode as ordinals; tombstone and filter doc_ids
+        # translate to them
+        pdf, neg_ords = _split_must_not(pdf, neg)
+        if excluder is not None:
+            exclude_docs = _merge_excludes(excluder(unit), exclude_docs)
+        kw = {}
+        if include is not None:
+            inc = sc.ords_of_docs(include)
+            # None: no filtered doc lives in this unit -> score nothing
+            kw["include"] = np.zeros(0, dtype=np.int64) if inc is None else inc
+        return kernel(
+            _rows_to_lists(pdf, idfs), avgdl, k, sc,
+            exclude=_merge_excludes(sc.ords_of_docs(exclude_docs), neg_ords),
+            **kw,
+        )
+
+    return score
+
+
+UNIT_RESULT_SCHEMA = "unit int, doc_id bigint, score double"
+
+
+def _unit_frame(
+    spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan,
+    k: int | None,
+) -> DataFrame:
+    """Distributed per-unit emissions of ``spec`` -> DataFrame(unit,
+    doc_id, score): each unit's top-k (every match when k is None) in one
+    groupBy("unit").applyInPandas job. Filter doc-id sets ride a
+    broadcast, never the task closure."""
+    import numpy as np
+
+    score = _unit_score(index_dir, spec, plan, k)
+    bc = spark.sparkContext.broadcast
+    inc_bc = None if spec.include is None else bc(spec.include)
+    exc_bc = None if spec.exclude_docs is None else bc(spec.exclude_docs)
+
+    def score_unit(key, pdf):
+        import pandas as pd
+
+        docs, scores = score(
+            key[0], pdf,
+            None if inc_bc is None else inc_bc.value,
+            None if exc_bc is None else exc_bc.value,
+        )
+        return pd.DataFrame(
+            {"unit": np.full(docs.size, key[0], dtype="int32"),
+             "doc_id": docs, "score": scores}
+        )
+
+    cols = _SEG_POS_COLS if spec.positions else _SEG_COLS
+    return _seg_rows(spark, index_dir, plan, cols).groupBy("unit").applyInPandas(
+        score_unit, schema=UNIT_RESULT_SCHEMA
+    )
+
+
+def _drop_stale(spark: SparkSession, index_dir: str, per_unit: DataFrame) -> DataFrame:
+    """Unit-scoped tombstone exclusion as a DISTRIBUTED anti-join over rows
+    carrying (unit, doc_id) — the path for tombstone sets beyond the
+    closure limit, whose doc-id array never touches the driver or the task
+    closures. A doc is stale in unit u iff some tombstone snapshot is NEWER
+    than u's input snapshot (LSN-as-version semantics)."""
+    from .incremental import read_tombstones, unit_snapshots
+
+    tombs = read_tombstones(spark, index_dir)
+    if tombs is None:
+        return per_unit
+    tomb_max = tombs.groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
+    usnap_df = _values_df(
+        spark, sorted(unit_snapshots(index_dir).items()), "unit int, __us bigint"
+    )
+    return (
+        per_unit.join(F.broadcast(usnap_df), "unit", "left")
+        .join(tomb_max, "doc_id", "left")
+        .filter(
+            F.col("__ts").isNull()
+            | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
+        )
+        .drop("__ts", "__us")
+    )
+
+
 def _run(spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan) -> DataFrame:
     """Score ``plan`` with ``spec.kernel`` on the driver tier when the byte
     gate admits it, else in one Spark job -> DataFrame(doc_id, score),
-    (score DESC, doc_id ASC) top-k; unordered every-match when k is None."""
+    (score DESC, doc_id ASC) top-k; unordered every-match when k is None.
+    Tombstones beyond the closure limit are dropped by ``_drop_stale``: over
+    the every-match emission, or inside the escalating top-k."""
     units = plan.stats["units"]
-    avgdl = float(plan.stats["avgdl"])
-    idfs, neg, k = plan.idfs, plan.neg, spec.k
-    read = sorted(idfs) + neg
-    cols = _SEG_POS_COLS if spec.positions else _SEG_COLS
-
-    def score(unit, pdf, excluder):
-        sc = _sidecar(index_dir, unit)
-        # neg docs decode as ordinals; tombstone doc_ids translate to them
-        pdf, neg_ords = _split_must_not(pdf, neg)
-        return spec.kernel(
-            _rows_to_lists(pdf, idfs), avgdl, k, sc,
-            exclude=_merge_excludes(sc.ords_of_docs(excluder(unit)), neg_ords),
-        )
-
-    if (
-        k is not None
-        and plan.excluder is not None
-        and _driver_tier_ok(
-            units, plan.dfs, read, plan.cfs if spec.positions else None
-        )
+    k = spec.k
+    if plan.excluder is None:
+        if k is None:
+            per_unit = _unit_frame(spark, index_dir, spec, plan, None)
+            return _drop_stale(spark, index_dir, per_unit).select("doc_id", "score")
+        return _search_escalating(spark, index_dir, spec, plan)
+    read = sorted(plan.idfs) + plan.neg
+    if k is not None and _driver_tier_ok(
+        units, plan.dfs, read, plan.cfs if spec.positions else None
     ):
+        score = _unit_score(index_dir, spec, plan, k)
+        cols = _SEG_POS_COLS if spec.positions else _SEG_COLS
         up = _unit_part_ids(plan.parts, read, units)
 
         def unit_rows(u: int) -> list:
@@ -665,23 +762,13 @@ def _run(spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan) -> DataF
             pdf = _unit_seg_pdf(index_dir, u, read, part_ids=up[u], columns=cols)
             if len(pdf) == 0:
                 return []
-            docs, scores = score(u, pdf, plan.excluder)
+            docs, scores = score(u, pdf, spec.include, spec.exclude_docs)
             return list(zip(docs.tolist(), scores.tolist()))
 
         rows = [r for rs in _map_units(units, unit_rows) for r in rs]
         return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
 
-    excluder = plan.excluder or _tombstone_excluder(index_dir)
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        docs, scores = score(key[0], pdf, excluder)
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = _seg_rows(spark, index_dir, plan, cols).groupBy("unit").applyInPandas(
-        score_unit, schema=RESULT_SCHEMA
-    )
+    per_unit = _unit_frame(spark, index_dir, spec, plan, k).select("doc_id", "score")
     if k is None:
         # every match, un-ordered and un-limited (a live doc exists in
         # exactly one unit, so the union needs no dedup)
@@ -724,19 +811,25 @@ def search(
     first, scoring only over survivors), with per-unit emission bounded by
     k — never n_docs. Three tiers by filter cardinality:
 
-    - |filter| <= ``filter_broadcast_limit``: the doc-id set rides a
-      broadcast into the scorers as an ``include`` mask (same mechanism as
-      tombstone ``exclude``); each unit emits its top-k of the filtered
-      docs — exact.
-    - complement small (filter keeps almost everything): broadcast the
-      complement (indexed docs NOT in the filter) merged into the
-      tombstone exclude set — exact, same bound.
+    - |filter| <= ``filter_broadcast_limit``: the doc-id set becomes the
+      spec's ``include`` mask (same mechanism as tombstone ``exclude``);
+      each unit emits its top-k of the filtered docs — exact.
+    - complement small (filter keeps almost everything): the complement
+      (indexed docs NOT in the filter) becomes the spec's
+      ``exclude_docs``, merged into the tombstone exclude set — exact,
+      same bound.
     - both sides huge (mid-selectivity at extreme scale): escalating
       two-phase — score per-unit top-c (c = 4k, growing 4x), semi-join
       the filter distributively, and accept the global top-k only when
       the kth filtered score strictly beats every non-exhausted unit's
       lowest emitted score (no unemitted doc can outrank it); else
       escalate c. Exact at every exit.
+
+    Every tier runs through the per-unit executor (``_run``): on the
+    driver tier when the byte gate admits the query (the filter ids are on
+    the driver already), else as one Spark job whose filter arrays ride a
+    broadcast. Tombstone sets over ``tombstone_closure_limit`` switch the
+    top-k to the escalating path with a distributed anti-join.
 
     Between an incremental delta and the next compaction, n_docs/avgdl are
     tombstone-corrected at merge time; per-term df still counts superseded
@@ -754,26 +847,10 @@ def search(
     plan = _plan(spark, index_dir, spec, tombstone_closure_limit)
     if plan is None:
         return _local_df(spark, [], RESULT_SCHEMA)
-    if plan.excluder is not None and filter_df is None:
+    if filter_df is None:
         return _run(spark, index_dir, spec, plan)
-
-    seg = _seg_rows(spark, index_dir, plan, _SEG_COLS)
-    avgdl = float(plan.stats["avgdl"])
-    n_docs = int(plan.stats["n_docs"])
-    if plan.excluder is None:
-        # tombstone set beyond the closure limit: unit-scoped exclusion
-        # runs as a DISTRIBUTED anti-join over per-unit top-c emissions
-        # (escalating until the kth kept score is provably final) — the
-        # doc-id array never touches the driver or the task closures
-        return _search_escalating(
-            spark, index_dir, seg, plan.idfs, avgdl, scorer, k, n_docs,
-            excluder=None,
-            semi_df=filter_df.select("doc_id") if filter_df is not None else None,
-            tomb_anti=True, neg_terms=plan.neg,
-        )
     return _search_filtered(
-        spark, index_dir, seg, plan.idfs, avgdl, scorer, k, plan.excluder,
-        filter_df, filter_broadcast_limit, n_docs, neg_terms=plan.neg,
+        spark, index_dir, spec, plan, filter_df, filter_broadcast_limit
     )
 
 
@@ -806,156 +883,73 @@ def search_after(
     ))
 
 
-UNIT_RESULT_SCHEMA = "unit int, doc_id bigint, score double"
-
-
 # diagnostics: which filtered-search tier the last `search` call used
 # ("include" | "exclude-complement" | "escalate") — asserted in tests
 _LAST_FILTER_MODE: str | None = None
 
 
-def _search_filtered(
-    spark, index_dir, seg, idfs, avgdl, scorer, k, excluder,
-    filter_df, broadcast_limit, n_docs, neg_terms=(),
-):
-    """Filtered search tiers (see ``search`` docstring). Returns the final
-    top-k DataFrame; every tier bounds per-unit scorer emission to <= the
-    current candidate count (k, or c during escalation), never n_docs."""
-    global _LAST_FILTER_MODE
+def _doc_id_array(pdf):
     import numpy as np
+
+    return np.unique(pdf["doc_id"].to_numpy(dtype="int64"))
+
+
+def _search_filtered(
+    spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan,
+    filter_df: DataFrame, broadcast_limit: int,
+) -> DataFrame:
+    """Pick the filtered-search tier (see ``search`` docstring) and run it;
+    every tier bounds per-unit scorer emission to <= the current candidate
+    count (k, or c during escalation), never n_docs."""
+    global _LAST_FILTER_MODE
 
     fl = filter_df.select("doc_id")
     ids_pdf = fl.limit(broadcast_limit + 1).toPandas()
     if len(ids_pdf) <= broadcast_limit:
         _LAST_FILTER_MODE = "include"
-        include = np.unique(ids_pdf["doc_id"].to_numpy(dtype="int64"))
-        inc_bc = spark.sparkContext.broadcast(include)
-
-        def score_inc(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            inc = sc.ords_of_docs(inc_bc.value)
-            if inc is None:  # no filtered doc lives in this unit
-                inc = np.zeros(0, dtype=np.int64)
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, k, sc,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-                include=inc,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_unit = seg.groupBy("unit").applyInPandas(score_inc, schema=RESULT_SCHEMA)
-        # filter already applied inside the scorers — no semi-join needed
-        return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        spec = spec._replace(include=_doc_id_array(ids_pdf))
+        return _run(spark, index_dir, spec, plan)
 
     # filter too big to broadcast — is its COMPLEMENT (within the indexed
     # docs) small? A keep-almost-everything filter excludes few docs.
-    docs_all = _docs_scan(
-        spark, index_dir, merge.load_stats(index_dir)["units"]
-    ).select("doc_id")
+    docs_all = _docs_scan(spark, index_dir, plan.stats["units"]).select("doc_id")
     comp_pdf = (
         docs_all.join(fl, "doc_id", "left_anti").limit(broadcast_limit + 1).toPandas()
     )
     if len(comp_pdf) <= broadcast_limit:
         _LAST_FILTER_MODE = "exclude-complement"
-        comp = np.unique(comp_pdf["doc_id"].to_numpy(dtype="int64"))
-        comp_bc = spark.sparkContext.broadcast(comp)
+        spec = spec._replace(exclude_docs=_doc_id_array(comp_pdf))
+        return _run(spark, index_dir, spec, plan)
 
-        def score_exc(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            ex = _merge_excludes(
-                _merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-                sc.ords_of_docs(comp_bc.value),
-            )
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, k, sc, exclude=ex,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_unit = seg.groupBy("unit").applyInPandas(score_exc, schema=RESULT_SCHEMA)
-        return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # escalating two-phase (shared with the big-tombstone path)
     _LAST_FILTER_MODE = "escalate"
-    return _search_escalating(
-        spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
-        excluder=excluder, semi_df=fl, neg_terms=neg_terms,
-    )
+    return _search_escalating(spark, index_dir, spec, plan, semi_df=fl)
 
 
 def _search_escalating(
-    spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
-    excluder=None, semi_df=None, tomb_anti=False, neg_terms=(),
-):
-    """Escalating two-phase top-k: per-unit top-c, distributed
-    semi-join (metadata filter) and/or unit-scoped tombstone ANTI-join,
-    accept only when the kth kept score strictly beats the best possible
-    unemitted score (each non-exhausted unit's lowest emitted score
-    upper-bounds everything it did not emit) — else c escalates 4x.
-    Exact at every exit; no doc-id set ever rides a closure."""
-    import numpy as np
-
-    tomb_max = usnap_df = None
-    if tomb_anti:
-        from .incremental import read_tombstones, unit_snapshots
-
-        tomb = read_tombstones(spark, index_dir)
-        tomb_max = tomb.groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
-        usnap_df = spark.createDataFrame(
-            [(int(u), int(s)) for u, s in unit_snapshots(index_dir).items()],
-            "unit int, __us bigint",
-        )
-
-    def make_score_c(_c):
-        def score_c(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            ex = (
-                sc.ords_of_docs(excluder(key[0])) if excluder is not None else None
-            )
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, _c, sc,
-                exclude=_merge_excludes(ex, neg_ords),
-            )
-            return pd.DataFrame(
-                {"unit": np.full(docs.size, key[0], dtype="int32"),
-                 "doc_id": docs, "score": scores}
-            )
-
-        return score_c
-
+    spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan,
+    semi_df: DataFrame | None = None,
+) -> DataFrame:
+    """Escalating two-phase top-k: per-unit top-c, distributed semi-join
+    (metadata filter) and/or unit-scoped tombstone anti-join (when the
+    plan has no excluder), accept only when the kth kept score strictly
+    beats the best possible unemitted score (each non-exhausted unit's
+    lowest emitted score upper-bounds everything it did not emit) — else c
+    escalates 4x. Exact at every exit; no doc-id set ever rides a
+    closure."""
+    k = spec.k
+    # the largest unit holds at most every physical doc row: live docs
+    # plus the superseded versions merge_index subtracted from n_docs
+    n_rows = int(plan.stats["n_docs"]) + int(plan.stats.get("tombstoned_docs", 0))
     c = max(4 * k, 64)
     while True:
-        score_c = make_score_c(c)
-        per_unit = (
-            seg.groupBy("unit")
-            .applyInPandas(score_c, schema=UNIT_RESULT_SCHEMA)
-            .persist()
-        )
+        per_unit = _unit_frame(spark, index_dir, spec, plan, c).persist()
         try:
             bounds = per_unit.groupBy("unit").agg(
                 F.count(F.lit(1)).alias("n"), F.min("score").alias("min_s")
             ).collect()
             kept = per_unit
-            if tomb_anti:
-                # a doc is stale in unit u iff some tombstone snapshot is
-                # NEWER than u's input snapshot (LSN-as-version semantics)
-                kept = (
-                    kept.join(F.broadcast(usnap_df), "unit", "left")
-                    .join(tomb_max, "doc_id", "left")
-                    .filter(
-                        F.col("__ts").isNull()
-                        | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
-                    )
-                    .drop("__ts", "__us")
-                )
+            if plan.excluder is None:
+                kept = _drop_stale(spark, index_dir, kept)
             if semi_df is not None:
                 kept = kept.join(semi_df, "doc_id", "left_semi")
             top = (
@@ -967,11 +961,11 @@ def _search_escalating(
         done = not open_bounds or (
             len(top) == k and top[-1]["score"] > max(open_bounds)
         )
-        if done or c >= n_docs:
-            return spark.createDataFrame(
-                [(r["doc_id"], r["score"]) for r in top], RESULT_SCHEMA
+        if done or c >= n_rows:
+            return _local_df(
+                spark, [(r["doc_id"], r["score"]) for r in top], RESULT_SCHEMA
             )
-        c = min(c * 4, n_docs)
+        c = min(c * 4, n_rows)
 
 
 def search_ranged(
@@ -1162,10 +1156,7 @@ def search_multifield(
         segs.append(
             _seg_scan(spark, field_indexes[f], stats[f]["units"])
             .filter(F.col("term").isin(present))
-            .select(
-                F.lit(f).alias("field"), "unit", "term", "df", "postings",
-                "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-            )
+            .select(F.lit(f).alias("field"), "unit", *_SEG_COLS)
         )
     seg = segs[0]
     for s in segs[1:]:
@@ -1200,6 +1191,23 @@ def search_multifield(
     return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _search_multifield_expanded(
+    spark: SparkSession, field_indexes: dict[str, str] | str, k: int,
+    boosts: dict[str, float] | None, expand: Callable[[str], list[str]],
+) -> DataFrame:
+    """Expand-then-score over a multi-field index: ``expand(index_dir)``
+    runs against EVERY field's lexicon, the expansions union, and the
+    union scores through the sum-fused ``search_multifield`` — a term
+    contributes in each field where it exists (per-field idf/df handle
+    absence naturally)."""
+    if isinstance(field_indexes, str):
+        field_indexes = discover_fields(field_indexes)
+    terms = sorted({t for d in field_indexes.values() for t in expand(d)})
+    if not terms:
+        return _local_df(spark, [], RESULT_SCHEMA)
+    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
+
+
 def search_multifield_prefix(
     spark: SparkSession,
     field_indexes: dict[str, str] | str,
@@ -1209,23 +1217,12 @@ def search_multifield_prefix(
     max_expansions: int = 128,
 ) -> DataFrame:
     """Prefix query over a multi-field index (OpenSearch multi_match
-    phrase_prefix/bool_prefix family): the prefix expands against EVERY
-    field's lexicon (each a driver-side range scan), the expansions union,
-    and the union scores through the standard sum-fused multifield BM25 —
-    a term contributes in each field where it exists (per-field idf/df
-    handle absence naturally)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_prefix(d, prefix, max_expansions)
-        }
+    phrase_prefix/bool_prefix family): per-field lexicon range scans,
+    union, sum-fused multifield BM25."""
+    return _search_multifield_expanded(
+        spark, field_indexes, k, boosts,
+        lambda d: expand_prefix(d, prefix, max_expansions),
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def search_multifield_wildcard(
@@ -1238,18 +1235,10 @@ def search_multifield_wildcard(
 ) -> DataFrame:
     """Wildcard query over a multi-field index: per-field lexicon
     expansion (streamed regex verify), union, sum-fused multifield BM25."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_wildcard(d, pattern, max_expansions)
-        }
+    return _search_multifield_expanded(
+        spark, field_indexes, k, boosts,
+        lambda d: expand_wildcard(d, pattern, max_expansions),
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def search_multifield_regexp(
@@ -1263,18 +1252,22 @@ def search_multifield_regexp(
     """Regexp query over a multi-field index: per-field anchored-regex
     lexicon expansion, union, sum-fused multifield BM25 (same shape as
     the multifield wildcard path)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_regexp(d, pattern, max_expansions)
-        }
+    return _search_multifield_expanded(
+        spark, field_indexes, k, boosts,
+        lambda d: expand_regexp(d, pattern, max_expansions),
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
+
+
+def _max_fuse(parts: list[DataFrame], k: int) -> DataFrame:
+    """best_fields fusion of per-field (doc_id, score) results: a doc's
+    score is its max over the parts -> (score DESC, doc_id ASC) top-k."""
+    return (
+        functools.reduce(DataFrame.unionByName, parts)
+        .groupBy("doc_id")
+        .agg(F.max("score").alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def search_multifield_phrase(
@@ -1313,15 +1306,7 @@ def search_multifield_phrase(
                 (F.col("score") * F.lit(float(boosts[f]))).alias("score"),
             )
         )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return (
-        u.groupBy("doc_id")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _max_fuse(parts, k)
 
 
 def search_multifield_phrase_prefix(
@@ -1350,15 +1335,13 @@ def search_multifield_phrase_prefix(
         )
         for f in sorted(field_indexes)
     ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return (
-        u.groupBy("doc_id")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _max_fuse(parts, k)
+
+
+def _prefix_upper(prefix: str) -> str:
+    """Exclusive upper bound of the terms starting with ``prefix`` —
+    tokens are [a-z0-9]+, so bumping the last char is safe."""
+    return prefix[:-1] + chr(ord(prefix[-1]) + 1)
 
 
 def expand_prefix(
@@ -1367,31 +1350,22 @@ def expand_prefix(
     """Prefix -> matching lexicon terms (lexicographic order, capped).
 
     The lexicon is term-sorted, range-partitioned parquet, so the prefix
-    is a pure RANGE predicate ``prefix <= term < prefix+1`` — parquet
-    row-group min/max statistics prune the scan to the touched groups, a
-    driver-side pyarrow read with no Spark job (same access path as the
-    exact-term lookup). The OpenSearch analog is the prefix/wildcard query
-    over the keyword subfield the reference's mapper writes for every text
-    column (opensearch_mapper.go:17,44-53)."""
+    is a pure RANGE ``prefix <= term < prefix+1``: ``termindex.scan`` reads
+    only the row groups whose cached footer range meets it, on the driver
+    with no Spark job (the same access path as the exact-term lookup), and
+    stops once the cap is reached. The OpenSearch analog is the
+    prefix/wildcard query over the keyword subfield the reference's mapper
+    writes for every text column (opensearch_mapper.go:17,44-53)."""
     if not prefix:
         raise ValueError("empty prefix")
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.dataset as ds
-
-    # tokens are [a-z0-9]+ — bumping the last byte is a safe upper bound
-    upper = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
-    dataset = ds.dataset(files, format="parquet")
-    table = dataset.to_table(
-        columns=["term"],
-        filter=(ds.field("term") >= prefix) & (ds.field("term") < upper),
-    )
-    terms = sorted(set(table["term"].to_pylist()))
-    return terms[:max_expansions]
+    out: list[str] = []
+    for b in termindex.scan(
+        merge.lexicon_path(index_dir), ["term"], prefix, _prefix_upper(prefix)
+    ):
+        out.extend(b.column("term").to_pylist())
+        if len(out) >= max_expansions:
+            break
+    return sorted(set(out))[:max_expansions]
 
 
 # ---- distributed expansion tier -------------------------------------------
@@ -1403,82 +1377,71 @@ def expand_prefix(
 # parquet, same pyarrow/numpy kernels, executors each matching their
 # split), and only the capped match list is collected. The gate is file
 # bytes — known before reading anything.
-_EXPAND_DRIVER_DEFAULT_BYTES = 64 << 20
+_EXPAND_DRIVER_BYTES = 64 << 20
 
 
-def _expand_driver_cap() -> int:
-    import os as _os
-
-    try:
-        return int(
-            _os.environ.get(
-                "PGSPARK_EXPAND_DRIVER_BYTES", _EXPAND_DRIVER_DEFAULT_BYTES
-            )
-        )
-    except ValueError:
-        return _EXPAND_DRIVER_DEFAULT_BYTES
-
-
-def _lexicon_files(index_dir: str) -> list[str]:
-    import glob as _glob
-    import os as _os
-
-    return sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
-
-
-def _expand_needs_job(files: list[str]) -> bool:
-    import os as _os
-
-    cap = _expand_driver_cap()
-    if cap <= 0:
-        return True
-    return sum(_os.path.getsize(f) for f in files) > cap
-
-
-def _collect_expansion_spark(
-    matched, max_expansions: int, what: str
+def _expand_lexicon(
+    index_dir: str, lead: str, hits: Callable, max_expansions: int, what: str,
+    stacklevel: int,
 ) -> list[str]:
-    """Deterministic cap of a distributed expansion: lexicographically
-    first ``max_expansions`` matches via TakeOrderedAndProject; one extra
-    row detects truncation (same warning contract as the driver stream)."""
+    """Stream the lexicon's terms through ``hits(term_array) -> matches``
+    in term order (only the ``lead`` prefix range when ``lead``, a literal
+    prefix REQUIRED of every match, is non-empty), with early exit once
+    ``max_expansions`` matches are found — no uncapped driver-side
+    materialization, and no pre-verification candidate cap that could
+    silently miss matches behind a hot leading literal. The lexicon is
+    range-partitioned + term-sorted and its files sort by partition id, so
+    the first ``max_expansions`` matches are the deterministic set; a
+    warning surfaces truncation. An unpruned scan of a lexicon over
+    ``_EXPAND_DRIVER_BYTES`` runs the same matcher as a distributed job
+    (``_expand_spark``)."""
     import warnings
 
-    rows = matched.orderBy("term").limit(max_expansions + 1).collect()
-    out = [r["term"] for r in rows]
+    lex = merge.lexicon_path(index_dir)
+    spark = None
+    if not lead and termindex.file_bytes(lex) > _EXPAND_DRIVER_BYTES:
+        spark = SparkSession.getActiveSession()
+    if spark is not None:
+        out = _expand_spark(spark, lex, hits, max_expansions + 1)
+    else:
+        lo, hi = (lead, _prefix_upper(lead)) if lead else (None, None)
+        out = []
+        for batch in termindex.scan(lex, ["term"], lo, hi):
+            out.extend(hits(batch.column("term")))
+            if len(out) > max_expansions:
+                break
+    out = sorted(set(out))
     if len(out) > max_expansions:
         warnings.warn(
             f"{what} expansion truncated to the first "
             f"{max_expansions} lexicon matches",
-            stacklevel=4,
+            stacklevel=stacklevel,
         )
-    return sorted(set(out[:max_expansions]))
+    return out[:max_expansions]
 
 
-def _expand_regex_spark(
-    spark: SparkSession, index_dir: str, rx: str, max_expansions: int,
-    what: str,
+def _expand_spark(
+    spark: SparkSession, lexicon_dir: str, hits: Callable, n: int
 ) -> list[str]:
-    """Distributed anchored-regex expansion: the same pyarrow RE2 matcher
-    the driver stream uses (NOT Java regex — tier choice must never change
-    which terms match), run per executor split via mapInArrow."""
+    """Distributed expansion -> the lexicographically first ``n`` matches
+    (TakeOrderedAndProject): the driver stream's own matcher ``hits``
+    (pyarrow RE2, NOT Java regex, or the numpy DP — tier choice must never
+    change which terms match) runs per executor split via mapInArrow over
+    the lexicon."""
 
     def match_fn(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for b in batches:
-            hits = pc.filter(
-                b.column("term"),
-                pc.match_substring_regex(b.column("term"), rx),
+            yield pa.record_batch(
+                [pa.array(hits(b.column("term")), type=pa.string())],
+                names=["term"],
             )
-            yield pa.record_batch([hits], names=["term"])
 
-    lex = spark.read.parquet(merge.lexicon_path(index_dir)).select("term")
-    return _collect_expansion_spark(
-        lex.mapInArrow(match_fn, "term string"), max_expansions, what
+    matched = spark.read.parquet(lexicon_dir).select("term").mapInArrow(
+        match_fn, "term string"
     )
+    return [r["term"] for r in matched.orderBy("term").limit(n).collect()]
 
 
 def _fuzzy_batch_hits(arr, qb, max_edits: int, transpositions: bool):
@@ -1515,95 +1478,19 @@ def _fuzzy_batch_hits(arr, qb, max_edits: int, transpositions: bool):
     return arr.take(pa.array(hits)).to_pylist()
 
 
-def _expand_fuzzy_spark(
-    spark: SparkSession, index_dir: str, term: str, max_edits: int,
-    max_expansions: int, transpositions: bool,
-) -> list[str]:
-    """Distributed fuzzy expansion: the same numpy DP kernel, one executor
-    split at a time via mapInArrow; only the capped match list returns."""
-    qbytes = term.encode("utf-8")
-
-    def match_fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qb = np.frombuffer(qbytes, dtype=np.uint8)
-        for b in batches:
-            hits = _fuzzy_batch_hits(
-                b.column("term"), qb, max_edits, transpositions
-            )
-            yield pa.record_batch(
-                [pa.array(hits, type=pa.string())], names=["term"]
-            )
-
-    lex = spark.read.parquet(merge.lexicon_path(index_dir)).select("term")
-    return _collect_expansion_spark(
-        lex.mapInArrow(match_fn, "term string"), max_expansions,
-        f"fuzzy {term!r} (max_edits={max_edits})",
-    )
-
-
 def _expand_lexicon_regex(
     index_dir: str, rx: str, lead: str, max_expansions: int, what: str
 ) -> list[str]:
-    """Anchored-regex lexicon expansion, STREAMED over the dataset scanner
-    batch-by-batch (pyarrow C++ ``match_substring_regex``) with early exit
-    once ``max_expansions`` matches are found — no uncapped driver-side
-    ``to_pylist`` materialization, and no pre-verification candidate cap
-    that could silently miss matches behind a hot leading literal.
-    ``lead`` (a REQUIRED literal prefix of every match, possibly empty)
-    prunes via the same range predicate as ``expand_prefix``. When the cap
-    truncates the (deterministic, lexicographically first) match set, a
-    warning surfaces it."""
-    import warnings
-
+    """Anchored-regex lexicon expansion (pyarrow C++ RE2
+    ``match_substring_regex`` per streamed batch, ``_expand_lexicon``);
+    ``lead`` prunes via the same range as ``expand_prefix``."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as ds
 
-    import glob as _glob
-    import os as _os
-
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
+    return _expand_lexicon(
+        index_dir, lead,
+        lambda col: pc.filter(col, pc.match_substring_regex(col, rx)).to_pylist(),
+        max_expansions, what, stacklevel=4,
     )
-    filt = None
-    if lead:
-        upper = lead[:-1] + chr(ord(lead[-1]) + 1)
-        filt = (ds.field("term") >= lead) & (ds.field("term") < upper)
-    elif _expand_needs_job(files):
-        # no range prune possible and the lexicon is beyond the driver
-        # byte gate: run the same RE2 matcher as a distributed job instead
-        # of streaming the whole lexicon through the driver
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            return _expand_regex_spark(spark, index_dir, rx, max_expansions, what)
-    # the lexicon is range-partitioned + term-sorted and files sort by
-    # partition id, so an in-order scan yields terms in lexicographic
-    # order — the first max_expansions matches are the deterministic set
-    scanner = ds.dataset(files, format="parquet").scanner(
-        columns=["term"], filter=filt, batch_size=64 * 1024
-    )
-    out: list[str] = []
-    truncated = False
-    for batch in scanner.to_batches():
-        if batch.num_rows == 0:
-            continue
-        hits = pc.filter(
-            batch.column("term"), pc.match_substring_regex(batch.column("term"), rx)
-        )
-        if len(hits):
-            out.extend(hits.to_pylist())
-        if len(out) > max_expansions:
-            truncated = True
-            break
-    out = sorted(set(out))
-    if truncated or len(out) > max_expansions:
-        warnings.warn(
-            f"{what} expansion truncated to the first "
-            f"{max_expansions} lexicon matches",
-            stacklevel=3,
-        )
-    return out[:max_expansions]
 
 
 def expand_wildcard(
@@ -1742,67 +1629,25 @@ def expand_fuzzy(
     ``expand_wildcard``: a driver-side pyarrow scan of the term-sorted
     lexicon, streamed batch-by-batch with no Spark job. ``prefix_length``
     (the ES parameter: first chars that must match exactly) turns the
-    scan into the ``expand_prefix`` RANGE predicate so parquet row-group
-    min/max statistics prune it. Per batch, candidates prune to the
+    scan into the ``expand_prefix`` RANGE, which the lexicon's footer
+    ranges prune to the groups it meets. Per batch, candidates prune to the
     ``|len - len(q)| <= max_edits`` window, then one vectorized DP
     (``_levenshtein_batch``) scores the whole batch. Deterministic cap:
     the lexicographically first ``max_expansions`` matches (the scan is
     in term order), same convention as prefix/wildcard."""
-    import glob as _glob
-    import os as _os
-    import warnings
-
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.dataset as ds
 
     if not term:
         raise ValueError("empty fuzzy term")
     if max_edits < 0 or max_edits > 2:
         raise ValueError("max_edits must be 0, 1, or 2 (the Lucene bound)")
     qb = np.frombuffer(term.encode("utf-8"), dtype=np.uint8)
-    m = len(qb)
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
+    lead = term[: min(prefix_length, len(term))] if prefix_length > 0 else ""
+    return _expand_lexicon(
+        index_dir, lead,
+        lambda col: _fuzzy_batch_hits(col, qb, max_edits, transpositions),
+        max_expansions, f"fuzzy {term!r} (max_edits={max_edits})", stacklevel=3,
     )
-    filt = None
-    if prefix_length > 0:
-        lead = term[: min(prefix_length, len(term))]
-        upper = lead[:-1] + chr(ord(lead[-1]) + 1)
-        filt = (ds.field("term") >= lead) & (ds.field("term") < upper)
-    elif _expand_needs_job(files):
-        # prefix_length=0 and the lexicon is beyond the driver byte gate:
-        # run the same DP kernel as a distributed job instead of streaming
-        # the whole lexicon through the driver
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            return _expand_fuzzy_spark(
-                spark, index_dir, term, max_edits, max_expansions,
-                transpositions,
-            )
-    scanner = ds.dataset(files, format="parquet").scanner(
-        columns=["term"], filter=filt, batch_size=64 * 1024
-    )
-    out: list[str] = []
-    truncated = False
-    for batch in scanner.to_batches():
-        if batch.num_rows == 0:
-            continue
-        hits = _fuzzy_batch_hits(
-            batch.column("term"), qb, max_edits, transpositions
-        )
-        out.extend(hits)
-        if len(out) > max_expansions:
-            truncated = True
-            break
-    out = sorted(set(out))
-    if truncated or len(out) > max_expansions:
-        warnings.warn(
-            f"fuzzy {term!r} (max_edits={max_edits}) expansion truncated to "
-            f"the first {max_expansions} lexicon matches",
-            stacklevel=2,
-        )
-    return out[:max_expansions]
 
 
 def search_fuzzy(
@@ -1839,21 +1684,12 @@ def search_multifield_fuzzy(
     """Fuzzy query over a multi-field index: per-field lexicon expansion,
     union, sum-fused multifield BM25 (the multi_match + fuzziness
     shape)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_fuzzy(
-                d, term, max_edits, max_expansions, prefix_length,
-                transpositions,
-            )
-        }
+    return _search_multifield_expanded(
+        spark, field_indexes, k, boosts,
+        lambda d: expand_fuzzy(
+            d, term, max_edits, max_expansions, prefix_length, transpositions
+        ),
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def _slot_lists(lists: list[dict], slots: list) -> list[list[dict]]:
@@ -1987,15 +1823,17 @@ def match_docs(
 
     The building block for facet aggregations (the reference's users get
     these from OpenSearch aggs): distributed per unit, postings decode of
-    doc ids only, no driver collect."""
+    doc ids only, no driver collect. Term lookup, scan and tombstone
+    handling are the executor's (``_plan``, ``_seg_rows``, ``_drop_stale``);
+    only the counting kernel is its own."""
+    import numpy as np
+
     terms = sorted(set(terms))
     need = len(terms) if mode == "and" else max(1, int(min_should_match))
-    excluder = _tombstone_excluder(index_dir)
-    seg = (
-        _seg_scan(spark, index_dir, merge.load_stats(index_dir)["units"])
-        .filter(F.col("term").isin(terms))
-        .select("unit", "term", "df", "postings")
-    )
+    plan = _plan(spark, index_dir, _Spec(terms, None, None, min_terms=need))
+    if plan is None:
+        return _local_df(spark, [], MATCH_SCHEMA)
+    excluder = plan.excluder
 
     def match_unit(key, pdf):
         import pandas as pd
@@ -2006,15 +1844,22 @@ def match_docs(
         ]
         sc = _sidecar(index_dir, key[0])
         ords, counts = wand.match_doc_counts(
-            lists, exclude=sc.ords_of_docs(excluder(key[0]))
+            lists,
+            exclude=None if excluder is None else sc.ords_of_docs(excluder(key[0])),
         )
         keep = counts >= need
         return pd.DataFrame(
-            {"doc_id": sc.doc_of(ords[keep]),
+            {"unit": np.full(int(keep.sum()), key[0], dtype="int32"),
+             "doc_id": sc.doc_of(ords[keep]),
              "n_matched": counts[keep].astype("int32")}
         )
 
-    return seg.groupBy("unit").applyInPandas(match_unit, schema=MATCH_SCHEMA)
+    per_unit = _seg_rows(spark, index_dir, plan, _SEG_COLS[:3]).groupBy(
+        "unit"
+    ).applyInPandas(match_unit, schema="unit int, " + MATCH_SCHEMA)
+    if excluder is None:
+        per_unit = _drop_stale(spark, index_dir, per_unit)
+    return per_unit.select("doc_id", "n_matched")
 
 
 def search_facets(
@@ -2176,16 +2021,12 @@ def select_mlt_terms(
     """more_like_this term selection (the OpenSearch MLT query's first
     phase): tokenize ``like`` with the index's own normalizer, rank its
     terms by tf x idf against the INDEX's document frequencies (driver-
-    side pyarrow lexicon lookup — one bounded scan, no Spark job), and
+    side ``termindex`` lookup — only the row groups holding its terms, no
+    Spark job), and
     keep the top ``max_query_terms`` (ties broken by term ASC). Terms
     under ``min_term_freq`` occurrences in ``like`` or ``min_doc_freq``
     index df are dropped, mirroring the MLT knobs."""
     from collections import Counter
-
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.dataset as ds
 
     from . import textnorm
 
@@ -2195,11 +2036,8 @@ def select_mlt_terms(
         return []
     stats = merge.load_stats(index_dir)
     n_docs = int(stats["n_docs"])
-    files = sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
-    table = ds.dataset(files, format="parquet").to_table(
-        columns=["term", "df_total"], filter=ds.field("term").isin(cand)
+    table = termindex.read(
+        merge.lexicon_path(index_dir), cand, ["term", "df_total"]
     )
     scored = []
     for term, df_total in zip(
@@ -2259,7 +2097,7 @@ def suggest_completion(
     Distributed: the lexicon is range-partitioned and term-sorted, so the
     prefix predicate prunes to a handful of parquet row groups and the
     top-n is a TakeOrderedAndProject."""
-    upper = prefix[:-1] + chr(ord(prefix[-1]) + 1) if prefix else None
+    upper = _prefix_upper(prefix) if prefix else None
     lex = merge.read_lexicon(spark, index_dir)
     if prefix:
         lex = lex.filter(
@@ -2293,7 +2131,7 @@ def suggest_term(
     parquet scan — both prune row groups before any distance is computed."""
     if prefix_length > 0:
         lead = text[:prefix_length]
-        upper = lead[:-1] + chr(ord(lead[-1]) + 1)
+        upper = _prefix_upper(lead)
     lex = merge.read_lexicon(spark, index_dir)
     if prefix_length > 0:
         lex = lex.filter((F.col("term") >= lead) & (F.col("term") < upper))
@@ -2323,27 +2161,17 @@ def explain_score(
     DataFrame(term, score), term ASC; the sum equals the doc's ``search``
     score bit-exactly (same decode + weight path, ``_decoded_contribs``
     with an include mask of just this doc). Distributed the same way as
-    search — every unit probes its sidecar for the doc (tombstone-aware),
-    emission <= |terms| rows total."""
+    search — every unit probes its sidecar for the doc (tombstone-aware,
+    through the executor's ``_plan`` / ``_drop_stale``), emission <=
+    |terms| rows per unit."""
     import numpy as np
 
-    stats = merge.load_stats(index_dir)
-    idfs = _term_stats(spark, index_dir, sorted(set(terms)), stats["n_docs"])[0]
-    present = sorted(idfs)
-    if not present:
-        return spark.createDataFrame([], EXPLAIN_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
+    plan = _plan(spark, index_dir, _Spec(sorted(set(terms)), None, None))
+    if plan is None:
+        return _local_df(spark, [], EXPLAIN_SCHEMA)
+    avgdl = float(plan.stats["avgdl"])
+    idfs, excluder = plan.idfs, plan.excluder
     target = int(doc_id)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
 
     def explain_unit(key, pdf):
         import pandas as pd
@@ -2353,7 +2181,7 @@ def explain_score(
         ords = sc.ords_of_docs(np.array([target], dtype=np.int64))
         out_t, out_s = [], []
         if ords is not None and ords.size:
-            tomb = sc.ords_of_docs(excluder(key[0]))
+            tomb = None if excluder is None else sc.ords_of_docs(excluder(key[0]))
             for lst in _rows_to_lists(pdf, idfs):
                 doc, contrib = wand._decoded_contribs(
                     lst, avgdl, sc, exclude=tomb, include=ords
@@ -2361,10 +2189,19 @@ def explain_score(
                 if doc.size:
                     out_t.append(lst["term"])
                     out_s.append(float(contrib[0]))
-        return pd.DataFrame({"term": pd.array(out_t, dtype="string"),
+        n = len(out_t)
+        return pd.DataFrame({"unit": np.full(n, key[0], dtype="int32"),
+                             "doc_id": np.full(n, target, dtype="int64"),
+                             "term": pd.array(out_t, dtype="string"),
                              "score": pd.array(out_s, dtype="float64")})
 
-    per_unit = seg.groupBy("unit").applyInPandas(explain_unit, schema=EXPLAIN_SCHEMA)
+    per_unit = _seg_rows(spark, index_dir, plan, _SEG_COLS).groupBy(
+        "unit"
+    ).applyInPandas(
+        explain_unit, schema="unit int, doc_id bigint, " + EXPLAIN_SCHEMA
+    )
+    if excluder is None:
+        per_unit = _drop_stale(spark, index_dir, per_unit)
     # salted head terms hold one row per salt; a superseded doc version in
     # an older unit is tombstone-excluded above — the per-term sum is the
     # doc's live contribution
@@ -2426,6 +2263,11 @@ def significant_terms(
         .orderBy(F.desc("score"), F.asc("term"))
         .limit(n)
     )
+
+
+# search_batch's bound on the bytes a shared term's postings duplicate
+# through the (unit, chunk) exchange
+_BATCH_DUP_BYTES = 256 << 20
 
 
 def search_batch(
@@ -2536,10 +2378,6 @@ def search_batch(
     # head term used by every query cannot multiply the shuffle by the
     # cluster's core count — halve the chunk count until the duplicate
     # budget fits.
-    import os as _os
-
-    dup_budget = int(_os.environ.get("PGSPARK_BATCH_DUP_BYTES", 256 << 20))
-
     def _dup_bytes(nc: int) -> int:
         uses: dict[str, int] = {}
         for ci in range(nc):
@@ -2549,7 +2387,7 @@ def search_batch(
             sum(all_dfs.get(t, 0) * 2.3 * (n - 1) for t, n in uses.items())
         )
 
-    while n_chunks > 1 and _dup_bytes(n_chunks) > dup_budget:
+    while n_chunks > 1 and _dup_bytes(n_chunks) > _BATCH_DUP_BYTES:
         n_chunks = max(1, n_chunks // 2)
     chunks = [qspec[i::n_chunks] for i in range(n_chunks)]
     tc_rows = sorted(
@@ -2628,69 +2466,15 @@ def score_all_matches(
     pruning is unsound there, so each unit emits all of its matches. The
     emission is O(sum df(term)) rows — the same order of work as decoding
     the query terms' posting lists, which any scorer does anyway; no
-    driver collect, no closure-borne doc sets. Tombstone sets beyond
-    ``tombstone_closure_limit`` are removed by a DISTRIBUTED unit-scoped
-    anti-join on the emitted rows (LSN-as-version semantics, same
-    predicate as ``_search_escalating``)."""
-    import numpy as np
-
-    stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    idfs = _term_stats(spark, index_dir, terms, stats["n_docs"])[0]
-    present = sorted(idfs)
-    if not present:
+    driver collect, no closure-borne doc sets. The executor's every-match
+    path (``_run`` with k=None): tombstone sets beyond
+    ``tombstone_closure_limit`` are removed by the distributed unit-scoped
+    anti-join on the emitted rows (``_drop_stale``)."""
+    spec = _Spec(sorted(set(terms)), wand.score_exhaustive, None)
+    plan = _plan(spark, index_dir, spec, tombstone_closure_limit)
+    if plan is None:
         return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder, tomb_big = _tombstone_excluder_bounded(
-        index_dir, tombstone_closure_limit
-    )
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        ex = None if tomb_big else sc.ords_of_docs(excluder(key[0]))
-        docs, scores = wand.score_exhaustive(
-            _rows_to_lists(pdf, idfs), avgdl, None, sc, exclude=ex
-        )
-        return pd.DataFrame(
-            {"unit": np.full(docs.size, key[0], dtype="int32"),
-             "doc_id": docs, "score": scores}
-        )
-
-    per_unit = seg.groupBy("unit").applyInPandas(
-        score_unit, schema=UNIT_RESULT_SCHEMA
-    )
-    if tomb_big:
-        from .incremental import read_tombstones, unit_snapshots
-
-        tomb_max = (
-            read_tombstones(spark, index_dir)
-            .groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
-        )
-        usnap_df = spark.createDataFrame(
-            [(int(u), int(s)) for u, s in unit_snapshots(index_dir).items()],
-            "unit int, __us bigint",
-        )
-        per_unit = (
-            per_unit.join(F.broadcast(usnap_df), "unit", "left")
-            .join(tomb_max, "doc_id", "left")
-            .filter(
-                F.col("__ts").isNull()
-                | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
-            )
-            .drop("__ts", "__us")
-        )
-    return per_unit.select("doc_id", "score")
+    return _run(spark, index_dir, spec, plan)
 
 
 def search_collapse(
@@ -3376,22 +3160,12 @@ def _dsl_ids_set(spark: SparkSession, index_dir: str, values) -> DataFrame:
     vals = sorted({int(v) for v in values})
     if not vals:
         return spark.createDataFrame([], "doc_id long")
-    excluder = _tombstone_excluder(index_dir)
     live = (
         _docs_scan(spark, index_dir, stats["units"])
         .select("unit", "doc_id")
         .filter(F.col("doc_id").isin(vals))
     )
-    pairs = []
-    vset = set(vals)
-    for u in stats["units"]:
-        ex = excluder(u)
-        if ex is not None and len(ex):
-            pairs.extend((int(u), int(d)) for d in set(ex.tolist()) & vset)
-    if pairs:
-        exdf = spark.createDataFrame(pairs, "unit int, doc_id long")
-        live = live.join(exdf, ["unit", "doc_id"], "left_anti")
-    return live.select("doc_id").distinct()
+    return _drop_stale(spark, index_dir, live).select("doc_id").distinct()
 
 
 def _dsl_constant_score(

@@ -20,6 +20,10 @@ merges and compaction write new Spark part-file names, so a rewrite rolls
 the key) and kept in a locked, size-bounded cache, because the driver tier
 reads units from a thread pool. A file without usable ``term`` statistics
 (or not sorted by term) is read whole and filtered.
+
+``scan`` serves term RANGES the same way (prefix, wildcard, regexp and
+fuzzy expansion over the lexicon): the row groups whose footer range
+meets ``[lo, hi)``, streamed in file order.
 """
 
 from __future__ import annotations
@@ -181,3 +185,35 @@ def read(
         return schema.empty_table().select(columns)
     t = pa.concat_tables(parts)
     return t.filter(pc.is_in(t[TERM], value_set=pa.array(terms, pa.string())))
+
+
+def scan(
+    directory: str, columns: list[str], lo: str | None = None,
+    hi: str | None = None, batch_size: int = 64 * 1024,
+):
+    """Yield record batches of ``columns`` (which must include ``term``)
+    holding the rows with ``lo <= term < hi`` (an open end when None),
+    reading only the row groups with max >= lo and min < hi; file order,
+    then row order — lexicographic term order over a range-partitioned
+    set whose file names sort by partition."""
+    for f in _footers(directory):
+        groups = None
+        if f.mins is not None:
+            first = 0 if lo is None else bisect.bisect_left(f.maxs, lo)
+            end = len(f.mins) if hi is None else bisect.bisect_left(f.mins, hi)
+            if first >= end:
+                continue
+            groups = list(range(first, end))
+        with pq.ParquetFile(f.path, metadata=f.metadata) as pf:
+            for b in pf.iter_batches(batch_size, groups, columns):
+                if lo is not None:
+                    b = b.filter(pc.greater_equal(b.column(TERM), lo))
+                if hi is not None:
+                    b = b.filter(pc.less(b.column(TERM), hi))
+                if b.num_rows:
+                    yield b
+
+
+def file_bytes(directory: str) -> int:
+    """Total size of the parquet files in ``directory``."""
+    return sum(os.path.getsize(f.path) for f in _footers(directory))

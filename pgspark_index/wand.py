@@ -42,7 +42,6 @@ never has to agree with doc_id order."""
 from __future__ import annotations
 
 import heapq
-import os
 
 import numpy as np
 
@@ -131,8 +130,10 @@ def _trank_of(tranks) -> int:
 def score_exhaustive(
     lists: list[dict], avgdl: float, k: int, sc,
     exclude: np.ndarray | None = None, include: np.ndarray | None = None,
+    after=None,
 ):
-    """Vectorized TAAT over fully decoded lists."""
+    """Vectorized TAAT over fully decoded lists; ``after`` = (score,
+    doc_id) keeps only docs ranking strictly after that cursor."""
     ranks = _term_ranks(lists)
     all_docs, all_contribs, all_tranks = [], [], []
     for lst in lists:
@@ -140,7 +141,9 @@ def score_exhaustive(
         all_docs.append(doc)
         all_contribs.append(contrib)
         all_tranks.append(np.full(doc.size, ranks[lst["term"]], dtype=np.int32))
-    return _exact_topk(all_docs, all_contribs, all_tranks, k, sc.doc_of)
+    return _exact_topk(
+        all_docs, all_contribs, all_tranks, k, sc.doc_of, after=after
+    )
 
 
 def score_exhaustive_after(
@@ -158,16 +161,7 @@ def score_exhaustive_after(
     matching doc's final score is computed (vectorized numpy), the cursor
     mask is applied, then top-k — exact at any page depth; the per-unit
     emission stays <= k."""
-    ranks = _term_ranks(lists)
-    all_docs, all_contribs, all_tranks = [], [], []
-    for lst in lists:
-        doc, contrib = _decoded_contribs(lst, avgdl, sc, exclude, include)
-        all_docs.append(doc)
-        all_contribs.append(contrib)
-        all_tranks.append(np.full(doc.size, ranks[lst["term"]], dtype=np.int32))
-    return _exact_topk(
-        all_docs, all_contribs, all_tranks, k, sc.doc_of, after=after
-    )
+    return score_exhaustive(lists, avgdl, k, sc, exclude, include, after=after)
 
 
 def _list_upper_bound(lst: dict, avgdl: float) -> float:
@@ -270,12 +264,10 @@ def _probe_blocks(lst: dict, cand_docs: np.ndarray, avgdl: float, sc):
 # overhead of its candidate merges/sorts. A flat per-row accumulator is
 # then the optimal TAAT shape — but it allocates 9 bytes/row PER SCORING
 # THREAD (the batch path scores several queries concurrently inside a
-# task), so it only engages on units up to this many rows (env-tunable,
-# 36 MB of transient accumulator at the default; at larger units the
-# standard MaxScore path runs unchanged).
-_DENSE_TAAT_MAX_ROWS = int(
-    os.environ.get("PGSPARK_DENSE_TAAT_MAX_ROWS", 4_000_000)
-)
+# task), so it only engages on units up to this many rows (36 MB of
+# transient accumulator; at larger units the standard MaxScore path runs
+# unchanged).
+_DENSE_TAAT_MAX_ROWS = 4_000_000
 
 
 def _dense_ok(sc) -> bool:

@@ -108,9 +108,9 @@ def test_distributed_expansion_matches_driver_stream(spark, idx, monkeypatch):
         lambda: query.expand_fuzzy(idx, "gamm", 1, 16, prefix_length=0,
                                    transpositions=True),
     ]
-    monkeypatch.setenv("PGSPARK_EXPAND_DRIVER_BYTES", str(64 << 20))
+    monkeypatch.setattr(query, "_EXPAND_DRIVER_BYTES", 64 << 20)
     stream = [c() for c in cases]
-    monkeypatch.setenv("PGSPARK_EXPAND_DRIVER_BYTES", "0")  # force the job
+    monkeypatch.setattr(query, "_EXPAND_DRIVER_BYTES", 0)  # force the job
     job = [c() for c in cases]
     assert job == stream
     assert stream[0]  # *eta matches beta/zeta/eta-family terms
@@ -287,3 +287,108 @@ def test_every_match_call_stays_distributed(spark, pending):
         if any(a == "alpha" and b == "beta" for a, b in zip(w, w[1:]))
     }
     assert {r["doc_id"] for r in df.collect()} == want
+
+
+# ---- filter tiers and big tombstone sets on the one executor ----------------
+
+
+def _ids_df(spark, ids):
+    return spark.createDataFrame([(int(i),) for i in sorted(ids)], "doc_id bigint")
+
+
+@pytest.mark.parametrize(
+    "keep, limit, mode",
+    [
+        (lambda i: i % 2 == 0, 4_000_000, "include"),
+        (lambda i: i not in (3, 35, 101), 10, "exclude-complement"),
+    ],
+    ids=["include", "complement"],
+)
+def test_filter_tiers_match_distributed(spark, pending, monkeypatch, keep, limit, mode):
+    """Both broadcast filter tiers, with must_not terms and pending
+    tombstones: the driver tier and the distributed path return the same
+    rows, equal to post-filtering the unfiltered ranking."""
+    idx, live = pending
+    terms, neg = ["alpha", "common", "gold"], ["rare"]
+    flt = _ids_df(spark, [i for i in live if keep(i)])
+
+    def call():
+        return query.search(
+            spark, idx, terms, 6, filter_df=flt, filter_broadcast_limit=limit,
+            exclude_terms=neg,
+        )
+
+    tier, dist = _tier_and_dist(monkeypatch, call)
+    assert query._LAST_FILTER_MODE == mode
+    assert tier == dist
+    full = _collect(query.search(spark, idx, terms, 1000, exclude_terms=neg))
+    assert tier == [(d, s) for d, s in full if keep(d)][:6]
+
+
+def test_filter_escalation_exact(spark, pending, monkeypatch):
+    """Neither the filter nor its complement fits the broadcast limit:
+    the escalating semi-join path, with tombstones in closures and with
+    the distributed anti-join, is still the post-filtered ranking."""
+    idx, live = pending
+    terms = ["alpha", "beta", "common"]
+    flt = _ids_df(spark, [i for i in live if i % 2])
+    full = _collect(query.search(spark, idx, terms, 1000))
+    want = [(d, s) for d, s in full if d % 2][:5]
+    for tomb_limit in (query.TOMBSTONE_CLOSURE_LIMIT, 1):
+        got = _collect(query.search(
+            spark, idx, terms, 5, filter_df=flt, filter_broadcast_limit=10,
+            tombstone_closure_limit=tomb_limit,
+        ))
+        assert query._LAST_FILTER_MODE == "escalate"
+        assert got == want, tomb_limit
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda s, d: query.search_phrase(s, d, ["common", "gold"], 8),
+        lambda s, d: query.search_after(
+            s, d, ["alpha", "gold"], 6, after=(1.0, -1)
+        ),
+        lambda s, d: query.search_min_should_match(
+            s, d, ["alpha", "gold", "rare", "silver"], 2, 8
+        ),
+        lambda s, d: query.search_phrase(s, d, ["alpha", "beta"], k=None),
+        lambda s, d: query.score_all_matches(
+            s, d, ["alpha", "gold"],
+            tombstone_closure_limit=query.TOMBSTONE_CLOSURE_LIMIT,
+        ),
+    ],
+    ids=["phrase", "after", "msm", "phrase-all", "all-matches"],
+)
+def test_big_tombstone_set_matches_closure_path(spark, pending, monkeypatch, call):
+    """Tombstones over the closure limit take the distributed anti-join
+    (``_drop_stale``) for every family on the executor — top-k through
+    escalation, every-match calls over the emission — with the same rows
+    as the closure path and no superseded version returned."""
+    idx, live = pending
+    closure = sorted(_collect(call(spark, idx)))
+    drops = []
+    real_drop = query._drop_stale
+
+    def counting_drop(*a):
+        drops.append(1)
+        return real_drop(*a)
+
+    monkeypatch.setattr(query, "_drop_stale", counting_drop)
+    monkeypatch.setattr(query, "TOMBSTONE_CLOSURE_LIMIT", 1)
+    anti = sorted(_collect(call(spark, idx)))
+    assert drops, "the anti-join path did not run"
+    assert anti == closure and anti
+    ids = [d for d, _ in anti]
+    assert len(ids) == len(set(ids))  # one (live) version per doc
+
+
+def test_all_matches_anti_join_drops_superseded(spark, pending):
+    idx, live = pending
+    got = {
+        d for d, _ in _collect(
+            query.score_all_matches(spark, idx, ["alpha"], tombstone_closure_limit=1)
+        )
+    }
+    assert got == {i for i, w in live.items() if "alpha" in w}

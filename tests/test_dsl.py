@@ -304,6 +304,25 @@ def test_dsl_respects_tombstones(spark, corpus_pdf, tmp_path_factory):
         assert a == pytest.approx(b, abs=1e-9)
 
 
+def test_ids_leaf_drops_tombstoned_docs(spark, corpus_pdf, tmp_path_factory):
+    """The ids leaf's liveness check runs the executor's unit-scoped
+    anti-join: dropped ids vanish, live ids stay, unknown ids never match."""
+    from pgspark_index import incremental
+
+    idx = str(tmp_path_factory.mktemp("dsl_ids_tomb") / "idx")
+    df = spark.createDataFrame(corpus_pdf, "doc_id long, text string")
+    build.build_index(spark, build.docs_unit_provider(df), idx,
+                      num_units=2, partitions=4, sample_fraction=1.0)
+    merge.merge_index(spark, idx)
+    want = [3, 7, 42, 9999]
+    assert sorted(d for d, _ in _run(spark, idx, {"ids": {"values": want}}, 10)) == [3, 7, 42]
+    incremental.drop_docs(
+        spark, idx, spark.createDataFrame([(7,), (42,)], "doc_id long")
+    )
+    merge.merge_index(spark, idx)
+    assert [d for d, _ in _run(spark, idx, {"ids": {"values": want}}, 10)] == [3]
+
+
 def test_dis_max_with_tie_breaker(spark, built, model):
     dsl = {"dis_max": {
         "queries": [{"term": "data"}, {"term": "fast"},

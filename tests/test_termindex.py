@@ -209,3 +209,89 @@ def test_threaded_lookups_match_serial(tmp_path):
     for t in threads:
         t.join()
     assert got == serial
+
+
+# ---- term ranges (lexicon expansion) ----------------------------------------
+
+
+def _range_scan(directory, lo, hi):
+    """The reference: a range-filtered dataset scan of every file."""
+    filt = None
+    if lo is not None:
+        filt = ds.field("term") >= lo
+    if hi is not None:
+        below = ds.field("term") < hi
+        filt = below if filt is None else filt & below
+    files = sorted(
+        os.path.join(directory, f) for f in os.listdir(directory) if f.endswith(".parquet")
+    )
+    return ds.dataset(files, format="parquet").to_table(columns=COLS, filter=filt)
+
+
+@pytest.fixture()
+def lexicon(tmp_path):
+    """A range-partitioned lexicon: two term-sorted files, 8-row groups;
+    prefix "b" spans groups 1 and 2 of the first file, "c" both files."""
+    d = str(tmp_path / "idx" / "lexicon")
+    terms = [f"{c}{i}{j}" for c in "abcd" for i in range(3) for j in range(4)]
+    _write(os.path.join(d, "part-00000-a.parquet"), _rows(terms[:30]), row_group_size=8)
+    _write(os.path.join(d, "part-00001-a.parquet"), _rows(terms[30:]), row_group_size=8)
+    return d, terms
+
+
+@pytest.mark.parametrize(
+    "lo, hi",
+    [("b", "c"), ("b1", "b2"), ("c", "d"), ("zz", "zz~"), ("a", "a"), (None, "b"), ("d2", None), (None, None)],
+)
+def test_scan_matches_range_filtered_scan(lexicon, lo, hi):
+    d, _ = lexicon
+    got = [r for b in termindex.scan(d, COLS, lo, hi) for r in b.to_pylist()]
+    assert got == _range_scan(d, lo, hi).to_pylist()
+
+
+def test_scan_reads_only_the_groups_meeting_the_range(lexicon, monkeypatch):
+    d, _ = lexicon
+    read = []
+    real = pq.ParquetFile.iter_batches
+
+    def spy(self, batch_size=65536, row_groups=None, columns=None, **kw):
+        read.append(row_groups)
+        return real(self, batch_size, row_groups, columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "iter_batches", spy)
+    assert list(termindex.scan(d, COLS, "b", "c"))
+    assert read == [[1, 2]]  # [a20..a23 b00..b03] [b10..b13 b20..b23]
+    read.clear()
+    assert not list(termindex.scan(d, COLS, "zz", "zz~"))
+    assert read == []
+
+
+def test_expansions_match_the_full_lexicon_scan(lexicon):
+    """expand_prefix / wildcard / regexp / fuzzy over the footer ranges
+    return the lexicographically first matches of a full scan."""
+    import re
+    import warnings
+
+    from pgspark_index import query
+
+    d, terms = lexicon
+    idx = os.path.dirname(d)
+
+    def first(pred, n):
+        return sorted(t for t in terms if pred(t))[:n]
+
+    assert query.expand_prefix(idx, "b", 128) == first(lambda t: t.startswith("b"), 128)
+    assert query.expand_prefix(idx, "b1", 128) == first(lambda t: t.startswith("b1"), 128)
+    assert query.expand_prefix(idx, "c", 128) == first(lambda t: t.startswith("c"), 128)
+    assert query.expand_prefix(idx, "zz", 128) == []
+    assert query.expand_prefix(idx, "c", 5) == first(lambda t: t.startswith("c"), 5)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        assert query.expand_wildcard(idx, "c?1", 128) == first(
+            lambda t: re.fullmatch("c.1", t), 128)
+        assert query.expand_wildcard(idx, "*2", 3) == first(lambda t: t.endswith("2"), 3)
+        assert query.expand_regexp(idx, "b[02]3", 128) == ["b03", "b23"]
+        assert query.expand_fuzzy(idx, "c11", 1, 128, prefix_length=1) == first(
+            lambda t: t[0] == "c" and sum(a != b for a, b in zip(t, "c11")) <= 1, 128)
+        assert query.expand_fuzzy(idx, "c11", 1, 4) == first(
+            lambda t: sum(a != b for a, b in zip(t, "c11")) <= 1, 4)

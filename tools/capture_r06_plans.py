@@ -92,7 +92,7 @@ def main():
 
     # distributed expansion tier (fuzzy prefix_length=0 / leading-*):
     # the mapInArrow-over-lexicon job that replaces the at-scale driver
-    # stream. Reconstructed exactly as _expand_fuzzy_spark builds it so
+    # stream. Reconstructed exactly as query._expand_spark builds it so
     # the pre-collect plan is visible (the entry point collects top-N).
     import numpy as np
     import pyarrow as pa
@@ -110,7 +110,7 @@ def main():
     lex = spark.read.parquet(merge.lexicon_path(idx)).select("term")
     dump("expand_fuzzy_distributed_after.txt",
          "# expand_fuzzy(prefix_length=0) over a lexicon beyond "
-         "PGSPARK_EXPAND_DRIVER_BYTES: mapInArrow(numpy DP) over the "
+         "query._EXPAND_DRIVER_BYTES: mapInArrow(numpy DP) over the "
          "lexicon scan + TakeOrderedAndProject(term) — round 5 streamed "
          "the whole lexicon through the driver at this setting\n\n"
          + formatted(

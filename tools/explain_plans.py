@@ -52,13 +52,26 @@ def main():
          formatted(seg))
     )
 
-    # 2. full query: per-unit scoring + global top-k
-    q = query.search(spark, idx, ["w00001", "w00002"], 10)
+    # 2. full query: per-unit scoring + global top-k. The driver tier would
+    # serve a query this small (a LocalTableScan), so it is switched off
+    # to show the distributed plan every query over the gate runs.
+    prev = os.environ.get("PGSPARK_QUERY_DRIVER_BYTES")
+    os.environ["PGSPARK_QUERY_DRIVER_BYTES"] = "0"
+    try:
+        q_plan = formatted(query.search(spark, idx, ["w00001", "w00002"], 10))
+    finally:
+        if prev is None:
+            del os.environ["PGSPARK_QUERY_DRIVER_BYTES"]
+        else:
+            os.environ["PGSPARK_QUERY_DRIVER_BYTES"] = prev
+    assert "TakeOrderedAndProject" in q_plan and "FlatMapGroupsInPandas" in q_plan
     sections.append(
-        ("Query: end-to-end top-k",
-         "MUST end in `TakeOrderedAndProject` (distributed partial top-k, no full sort) "
-         "above a FlatMapGroupsInPandas scoring stage.",
-         formatted(q))
+        ("Query: end-to-end top-k (distributed path)",
+         "Captured with `PGSPARK_QUERY_DRIVER_BYTES=0` (below the gate the driver "
+         "tier answers with a `LocalTableScan`). MUST end in `TakeOrderedAndProject` "
+         "(distributed partial top-k, no full sort) above a FlatMapGroupsInPandas "
+         "scoring stage (asserted by this generator).",
+         q_plan)
     )
 
     # 3. build input: unit predicate pushed into the scan, ONE hash
