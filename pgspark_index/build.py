@@ -144,7 +144,6 @@ def quarantine_path(index_dir: str) -> str:
     return os.path.join(index_dir, "quarantine")
 
 
-_CHUNK_ROWS = 1 << 20  # ~1M postings (~50 MB of arrays) per vectorized flush
 # flush granularity of the tokenize stage: ~2M postings bounds the python
 # accumulator working set (~150 MB incl. term strings) — measured faster
 # than one huge flush per task (allocator/cache pressure grows superlinear)

@@ -51,20 +51,15 @@ def decode_image(payload: bytes) -> "np.ndarray":
     )
 
 
-def _fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for a decode+embed kernel: integer-exact
-    byte-stream statistics (pure numpy over the payload buffer). All eight
-    features are exact integers so the value is bit-identical across
-    engines — no float summation-order hazards in the correctness gate."""
-    return _fake_features_batch([payload], dim)[0]
-
-
 def _fake_features_batch(payloads, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Vectorized fake kernel over a WHOLE Arrow batch -> (n, dim) int64.
+    """Deterministic stand-in for a decode+embed kernel over a WHOLE Arrow
+    batch -> (n, dim) int64: integer-exact byte-stream statistics, so the
+    value is bit-identical across engines (no float summation-order
+    hazards in the correctness gate).
 
     One concatenated byte buffer + ``np.*.reduceat`` over per-row
     segments: no per-row Python in the batch hot path (bytes join and
-    len() are C-level), identical outputs to the per-row form."""
+    len() are C-level)."""
     n_rows = len(payloads)
     if n_rows == 0:
         return np.zeros((0, dim), dtype=np.int64)

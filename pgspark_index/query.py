@@ -675,20 +675,28 @@ def _unit_score(index_dir: str, spec: _Spec, plan: _Plan, k: int | None):
 UNIT_RESULT_SCHEMA = "unit int, doc_id bigint, score double"
 
 
+def _broadcast_filters(spark: SparkSession, spec: _Spec) -> tuple:
+    """-> (include, exclude_docs) broadcasts of ``spec``'s filter doc-id
+    sets, None where the spec has none."""
+    bc = spark.sparkContext.broadcast
+    return tuple(
+        None if a is None else bc(a) for a in (spec.include, spec.exclude_docs)
+    )
+
+
 def _unit_frame(
     spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan,
-    k: int | None,
+    k: int | None, filters: tuple | None = None,
 ) -> DataFrame:
     """Distributed per-unit emissions of ``spec`` -> DataFrame(unit,
     doc_id, score): each unit's top-k (every match when k is None) in one
-    groupBy("unit").applyInPandas job. Filter doc-id sets ride a
-    broadcast, never the task closure."""
+    groupBy("unit").applyInPandas job. Filter doc-id sets ride broadcasts,
+    never the task closure: ``filters`` from ``_broadcast_filters``, made
+    here when None."""
     import numpy as np
 
     score = _unit_score(index_dir, spec, plan, k)
-    bc = spark.sparkContext.broadcast
-    inc_bc = None if spec.include is None else bc(spec.include)
-    exc_bc = None if spec.exclude_docs is None else bc(spec.exclude_docs)
+    inc_bc, exc_bc = filters or _broadcast_filters(spark, spec)
 
     def score_unit(key, pdf):
         import pandas as pd
@@ -709,21 +717,32 @@ def _unit_frame(
     )
 
 
-def _drop_stale(spark: SparkSession, index_dir: str, per_unit: DataFrame) -> DataFrame:
-    """Unit-scoped tombstone exclusion as a DISTRIBUTED anti-join over rows
-    carrying (unit, doc_id) — the path for tombstone sets beyond the
-    closure limit, whose doc-id array never touches the driver or the task
-    closures. A doc is stale in unit u iff some tombstone snapshot is NEWER
-    than u's input snapshot (LSN-as-version semantics)."""
+def _stale_keys(spark: SparkSession, index_dir: str):
+    """-> (newest tombstone snapshot per doc, input snapshot per unit)
+    frames for ``_drop_stale``; None when the index has no tombstones."""
     from .incremental import read_tombstones, unit_snapshots
 
     tombs = read_tombstones(spark, index_dir)
     if tombs is None:
-        return per_unit
-    tomb_max = tombs.groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
-    usnap_df = _values_df(
-        spark, sorted(unit_snapshots(index_dir).items()), "unit int, __us bigint"
+        return None
+    return (
+        tombs.groupBy("doc_id").agg(F.max("snapshot").alias("__ts")),
+        _values_df(
+            spark, sorted(unit_snapshots(index_dir).items()), "unit int, __us bigint"
+        ),
     )
+
+
+def _drop_stale(per_unit: DataFrame, keys) -> DataFrame:
+    """Unit-scoped tombstone exclusion as a DISTRIBUTED anti-join over rows
+    carrying (unit, doc_id) — the path for tombstone sets beyond the
+    closure limit, whose doc-id array never touches the driver or the task
+    closures. A doc is stale in unit u iff some tombstone snapshot is NEWER
+    than u's input snapshot (LSN-as-version semantics). ``keys`` comes
+    from ``_stale_keys``."""
+    if keys is None:
+        return per_unit
+    tomb_max, usnap_df = keys
     return (
         per_unit.join(F.broadcast(usnap_df), "unit", "left")
         .join(tomb_max, "doc_id", "left")
@@ -746,7 +765,9 @@ def _run(spark: SparkSession, index_dir: str, spec: _Spec, plan: _Plan) -> DataF
     if plan.excluder is None:
         if k is None:
             per_unit = _unit_frame(spark, index_dir, spec, plan, None)
-            return _drop_stale(spark, index_dir, per_unit).select("doc_id", "score")
+            return _drop_stale(per_unit, _stale_keys(spark, index_dir)).select(
+                "doc_id", "score"
+            )
         return _search_escalating(spark, index_dir, spec, plan)
     read = sorted(plan.idfs) + plan.neg
     if k is not None and _driver_tier_ok(
@@ -792,7 +813,7 @@ def search(
     mode: str = "or",
     filter_df: DataFrame | None = None,
     filter_broadcast_limit: int = 4_000_000,
-    tombstone_closure_limit: int = TOMBSTONE_CLOSURE_LIMIT,
+    tombstone_closure_limit: int | None = None,
     exclude_terms: list[str] | None = None,
 ) -> DataFrame:
     """Top-k BM25 -> DataFrame(doc_id, score), (score DESC, doc_id ASC).
@@ -828,8 +849,9 @@ def search(
     Every tier runs through the per-unit executor (``_run``): on the
     driver tier when the byte gate admits the query (the filter ids are on
     the driver already), else as one Spark job whose filter arrays ride a
-    broadcast. Tombstone sets over ``tombstone_closure_limit`` switch the
-    top-k to the escalating path with a distributed anti-join.
+    broadcast. Tombstone sets over ``tombstone_closure_limit`` (None:
+    ``TOMBSTONE_CLOSURE_LIMIT`` at call time) switch the top-k to the
+    escalating path with a distributed anti-join.
 
     Between an incremental delta and the next compaction, n_docs/avgdl are
     tombstone-corrected at merge time; per-term df still counts superseded
@@ -941,31 +963,41 @@ def _search_escalating(
     # plus the superseded versions merge_index subtracted from n_docs
     n_rows = int(plan.stats["n_docs"]) + int(plan.stats.get("tombstoned_docs", 0))
     c = max(4 * k, 64)
-    while True:
-        per_unit = _unit_frame(spark, index_dir, spec, plan, c).persist()
-        try:
-            bounds = per_unit.groupBy("unit").agg(
-                F.count(F.lit(1)).alias("n"), F.min("score").alias("min_s")
-            ).collect()
-            kept = per_unit
-            if plan.excluder is None:
-                kept = _drop_stale(spark, index_dir, kept)
-            if semi_df is not None:
-                kept = kept.join(semi_df, "doc_id", "left_semi")
-            top = (
-                kept.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+    # built once per query, reused by every round, released on return
+    filters = _broadcast_filters(spark, spec)
+    stale = None if plan.excluder is not None else _stale_keys(spark, index_dir)
+    if stale is not None:
+        stale[0].persist()
+    try:
+        while True:
+            per_unit = _unit_frame(spark, index_dir, spec, plan, c, filters).persist()
+            try:
+                bounds = per_unit.groupBy("unit").agg(
+                    F.count(F.lit(1)).alias("n"), F.min("score").alias("min_s")
+                ).collect()
+                kept = _drop_stale(per_unit, stale)
+                if semi_df is not None:
+                    kept = kept.join(semi_df, "doc_id", "left_semi")
+                top = (
+                    kept.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+                )
+            finally:
+                per_unit.unpersist()
+            open_bounds = [r["min_s"] for r in bounds if int(r["n"]) >= c]
+            done = not open_bounds or (
+                len(top) == k and top[-1]["score"] > max(open_bounds)
             )
-        finally:
-            per_unit.unpersist()
-        open_bounds = [r["min_s"] for r in bounds if int(r["n"]) >= c]
-        done = not open_bounds or (
-            len(top) == k and top[-1]["score"] > max(open_bounds)
-        )
-        if done or c >= n_rows:
-            return _local_df(
-                spark, [(r["doc_id"], r["score"]) for r in top], RESULT_SCHEMA
-            )
-        c = min(c * 4, n_rows)
+            if done or c >= n_rows:
+                return _local_df(
+                    spark, [(r["doc_id"], r["score"]) for r in top], RESULT_SCHEMA
+                )
+            c = min(c * 4, n_rows)
+    finally:
+        for b in filters:
+            if b is not None:
+                b.destroy()
+        if stale is not None:
+            stale[0].unpersist()
 
 
 def search_ranged(
@@ -1858,7 +1890,7 @@ def match_docs(
         "unit"
     ).applyInPandas(match_unit, schema="unit int, " + MATCH_SCHEMA)
     if excluder is None:
-        per_unit = _drop_stale(spark, index_dir, per_unit)
+        per_unit = _drop_stale(per_unit, _stale_keys(spark, index_dir))
     return per_unit.select("doc_id", "n_matched")
 
 
@@ -2201,7 +2233,7 @@ def explain_score(
         explain_unit, schema="unit int, doc_id bigint, " + EXPLAIN_SCHEMA
     )
     if excluder is None:
-        per_unit = _drop_stale(spark, index_dir, per_unit)
+        per_unit = _drop_stale(per_unit, _stale_keys(spark, index_dir))
     # salted head terms hold one row per salt; a superseded doc version in
     # an older unit is tombstone-excluded above — the per-term sum is the
     # doc's live contribution
@@ -2456,7 +2488,7 @@ def score_all_matches(
     spark: SparkSession,
     index_dir: str,
     terms: list[str],
-    tombstone_closure_limit: int = TOMBSTONE_CLOSURE_LIMIT,
+    tombstone_closure_limit: int | None = None,
 ) -> DataFrame:
     """EVERY live matching doc with its full BM25 score ->
     DataFrame(doc_id, score), unordered.
@@ -2468,8 +2500,9 @@ def score_all_matches(
     the query terms' posting lists, which any scorer does anyway; no
     driver collect, no closure-borne doc sets. The executor's every-match
     path (``_run`` with k=None): tombstone sets beyond
-    ``tombstone_closure_limit`` are removed by the distributed unit-scoped
-    anti-join on the emitted rows (``_drop_stale``)."""
+    ``tombstone_closure_limit`` (None: ``TOMBSTONE_CLOSURE_LIMIT`` at call
+    time) are removed by the distributed unit-scoped anti-join on the
+    emitted rows (``_drop_stale``)."""
     spec = _Spec(sorted(set(terms)), wand.score_exhaustive, None)
     plan = _plan(spark, index_dir, spec, tombstone_closure_limit)
     if plan is None:
@@ -3165,7 +3198,22 @@ def _dsl_ids_set(spark: SparkSession, index_dir: str, values) -> DataFrame:
         .select("unit", "doc_id")
         .filter(F.col("doc_id").isin(vals))
     )
-    return _drop_stale(spark, index_dir, live).select("doc_id").distinct()
+    excluder, _ = _tombstone_excluder_bounded(index_dir, TOMBSTONE_CLOSURE_LIMIT)
+    if excluder is None:
+        live = _drop_stale(live, _stale_keys(spark, index_dir))
+        return live.select("doc_id").distinct()
+    # tombstones within the limit: anti-join only the (unit, doc) pairs
+    # the driver finds among the requested ids
+    pairs = []
+    vset = set(vals)
+    for u in stats["units"]:
+        ex = excluder(u)
+        if ex is not None:
+            pairs.extend((int(u), d) for d in sorted(vset.intersection(ex.tolist())))
+    if pairs:
+        exdf = spark.createDataFrame(pairs, "unit int, doc_id long")
+        live = live.join(exdf, ["unit", "doc_id"], "left_anti")
+    return live.select("doc_id").distinct()
 
 
 def _dsl_constant_score(

@@ -189,7 +189,7 @@ def read(
 
 def scan(
     directory: str, columns: list[str], lo: str | None = None,
-    hi: str | None = None, batch_size: int = 64 * 1024,
+    hi: str | None = None,
 ):
     """Yield record batches of ``columns`` (which must include ``term``)
     holding the rows with ``lo <= term < hi`` (an open end when None),
@@ -205,7 +205,7 @@ def scan(
                 continue
             groups = list(range(first, end))
         with pq.ParquetFile(f.path, metadata=f.metadata) as pf:
-            for b in pf.iter_batches(batch_size, groups, columns):
+            for b in pf.iter_batches(64 * 1024, groups, columns):
                 if lo is not None:
                     b = b.filter(pc.greater_equal(b.column(TERM), lo))
                 if hi is not None:

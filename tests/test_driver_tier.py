@@ -306,16 +306,17 @@ def _ids_df(spark, ids):
 )
 def test_filter_tiers_match_distributed(spark, pending, monkeypatch, keep, limit, mode):
     """Both broadcast filter tiers, with must_not terms and pending
-    tombstones: the driver tier and the distributed path return the same
-    rows, equal to post-filtering the unfiltered ranking."""
+    tombstones: the driver tier, the distributed path and, with the
+    tombstones over the closure limit, the escalating anti-join path
+    return the same rows, equal to post-filtering the unfiltered ranking."""
     idx, live = pending
     terms, neg = ["alpha", "common", "gold"], ["rare"]
     flt = _ids_df(spark, [i for i in live if keep(i)])
 
-    def call():
+    def call(tomb_limit=None):
         return query.search(
             spark, idx, terms, 6, filter_df=flt, filter_broadcast_limit=limit,
-            exclude_terms=neg,
+            tombstone_closure_limit=tomb_limit, exclude_terms=neg,
         )
 
     tier, dist = _tier_and_dist(monkeypatch, call)
@@ -323,6 +324,7 @@ def test_filter_tiers_match_distributed(spark, pending, monkeypatch, keep, limit
     assert tier == dist
     full = _collect(query.search(spark, idx, terms, 1000, exclude_terms=neg))
     assert tier == [(d, s) for d, s in full if keep(d)][:6]
+    assert _collect(call(tomb_limit=1)) == tier
 
 
 def test_filter_escalation_exact(spark, pending, monkeypatch):
@@ -354,10 +356,7 @@ def test_filter_escalation_exact(spark, pending, monkeypatch):
             s, d, ["alpha", "gold", "rare", "silver"], 2, 8
         ),
         lambda s, d: query.search_phrase(s, d, ["alpha", "beta"], k=None),
-        lambda s, d: query.score_all_matches(
-            s, d, ["alpha", "gold"],
-            tombstone_closure_limit=query.TOMBSTONE_CLOSURE_LIMIT,
-        ),
+        lambda s, d: query.score_all_matches(s, d, ["alpha", "gold"]),
     ],
     ids=["phrase", "after", "msm", "phrase-all", "all-matches"],
 )

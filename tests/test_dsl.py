@@ -304,10 +304,12 @@ def test_dsl_respects_tombstones(spark, corpus_pdf, tmp_path_factory):
         assert a == pytest.approx(b, abs=1e-9)
 
 
-def test_ids_leaf_drops_tombstoned_docs(spark, corpus_pdf, tmp_path_factory):
-    """The ids leaf's liveness check runs the executor's unit-scoped
-    anti-join: dropped ids vanish, live ids stay, unknown ids never match."""
-    from pgspark_index import incremental
+def test_ids_leaf_drops_tombstoned_docs(spark, corpus_pdf, tmp_path_factory, monkeypatch):
+    """The ids leaf's liveness check: dropped ids vanish, live ids stay,
+    unknown ids never match — with the tombstones intersected on the
+    driver and, over the closure limit, through the executor's
+    unit-scoped anti-join."""
+    from pgspark_index import incremental, query
 
     idx = str(tmp_path_factory.mktemp("dsl_ids_tomb") / "idx")
     df = spark.createDataFrame(corpus_pdf, "doc_id long, text string")
@@ -320,6 +322,8 @@ def test_ids_leaf_drops_tombstoned_docs(spark, corpus_pdf, tmp_path_factory):
         spark, idx, spark.createDataFrame([(7,), (42,)], "doc_id long")
     )
     merge.merge_index(spark, idx)
+    assert [d for d, _ in _run(spark, idx, {"ids": {"values": want}}, 10)] == [3]
+    monkeypatch.setattr(query, "TOMBSTONE_CLOSURE_LIMIT", 1)
     assert [d for d, _ in _run(spark, idx, {"ids": {"values": want}}, 10)] == [3]
 
 
